@@ -23,7 +23,6 @@ from hive_plan_service_spark.operators.multimodal import (
     decode_features,
 )
 from hive_plan_service_spark.operators.vectors import (
-    cosine,
     cosine_topk,
     ivf_assign,
     ivf_topk,
@@ -33,7 +32,6 @@ __all__ = [
     "asof_join",
     "attach_binary_payload",
     "bucketed_join",
-    "cosine",
     "cosine_topk",
     "current_counter_value",
     "decode_features",

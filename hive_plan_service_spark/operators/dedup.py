@@ -25,9 +25,9 @@ from pyspark.sql import functions as F
 from hive_plan_service_spark.operators.textops import (
     FNV_MOD,
     rolling_fingerprint_sql,
-    shingles,
     shingles_sql,
-    tokens,
+    sql_ident,
+    sql_string,
     tokens_sql,
 )
 
@@ -44,43 +44,27 @@ _BUCKET_MULT = 1000003
 _AVA_C = 700000001
 
 
-def _portable_rehash(h, i: int):
-    """i-th portable rehash of a base hash column (exact in int64)."""
-    return (h * F.lit(_MINHASH_A + 2 * i) + F.lit(_MINHASH_B + 97 * i)) % F.lit(
-        FNV_MOD
-    )
-
-
 def _portable_rehash_sql(h: str, i: int) -> str:
-    """SQL twin of :func:`_portable_rehash` (same integer literals —
-    they parse as INT exactly as the Python ints ``lit`` to)."""
+    """i-th portable rehash of a base hash expression (exact in int64)."""
     return f"({h} * {_MINHASH_A + 2 * i} + {_MINHASH_B + 97 * i}) % {FNV_MOD}"
 
 
-#: SQL twin of :func:`_portable_avalanche` as a finish-lambda body
-#: template over ``{acc}`` — like the Column form, the accumulator
-#: variable is referenced (re-read), the fold never re-evaluated.
+#: Two squaring rounds mod 2^31−1 — bit diffusion for SimHash — as a
+#: lambda-body template over ``{acc}``.
+#:
+#: The raw polynomial hash of a short token is a SMALL number (31^5 ≈
+#: 2^25 for a 5-char word), so its high bits are constantly zero and a
+#: sketch built from it is degenerate (measured: 1.36M Hamming≤3 pairs
+#: at sf0.1 vs 525 healthy). ``((h+C)²) mod M`` twice spreads any input
+#: across the full 31 bits (measured within 2.5× of an ideal hash's
+#: pair count); plain int64 arithmetic, so DuckDB reproduces it. In a
+#: fold's finish lambda ``{acc}`` is the accumulator variable, so its
+#: four references re-read a slot and never re-evaluate the fold.
 _AVALANCHE_SQL = (
     f"(((({{acc}} + {_AVA_C}) * ({{acc}} + {_AVA_C})) % {FNV_MOD}"
     f" + {_AVA_C}) * (((({{acc}} + {_AVA_C}) * ({{acc}} + {_AVA_C}))"
     f" % {FNV_MOD}) + {_AVA_C})) % {FNV_MOD}"
 )
-
-
-def _portable_avalanche(h):
-    """Two squaring rounds mod 2^31−1 — bit diffusion for SimHash.
-
-    The raw polynomial hash of a short token is a SMALL number (31^5 ≈
-    2^25 for a 5-char word), so its high bits are constantly zero and a
-    sketch built from it is degenerate (measured: 1.36M Hamming≤3 pairs
-    at sf0.1 vs 525 healthy). ``((h+C)²) mod M`` twice spreads any input
-    across the full 31 bits (measured within 2.5× of an ideal hash's
-    pair count); plain int64 arithmetic, so DuckDB reproduces it.
-    """
-    c = F.lit(_AVA_C)
-    m = F.lit(FNV_MOD)
-    h1 = ((h + c) * (h + c)) % m
-    return ((h1 + c) * (h1 + c)) % m
 
 
 def _spread(df: DataFrame, key: str) -> DataFrame:
@@ -100,8 +84,9 @@ def _spread(df: DataFrame, key: str) -> DataFrame:
 
 def shingle_table(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
     """(id, shingle) rows — distinct word n-grams per document."""
-    return _spread(docs, id_col).select(
-        F.col(id_col), F.explode(shingles(tokens(text_col), n)).alias("shingle")
+    words = tokens_sql(sql_ident(text_col))
+    return _spread(docs, id_col).selectExpr(
+        sql_ident(id_col), f"explode({shingles_sql(words, n)}) AS shingle"
     )
 
 
@@ -201,8 +186,8 @@ def jaccard_verify_pairs(
         docs.join(cand_ids, id_col, "left_semi")
         .repartition(default_parallelism(), id_col)
         .selectExpr(
-            f"`{id_col}`",
-            f"{shingles_sql(tokens_sql(f'`{text_col}`'), n)} AS `_sh`",
+            sql_ident(id_col),
+            f"{shingles_sql(tokens_sql(sql_ident(text_col)), n)} AS _sh",
         )
     )
     # merge hints: BOTH relations here are SF-proportional (invariant
@@ -268,10 +253,10 @@ def minhash_signatures(
     # expression family is the construction hot spot — every F.* call
     # is py4j round trips and the HOF lambdas cost several each; one
     # selectExpr/expr string parses JVM-side in a single trip to the
-    # same Catalyst expressions (see textops.py's _sql-twin note).
+    # same Catalyst expressions (textops.py's SQL-text convention).
     sh = _spread(docs, id_col).selectExpr(
-        f"`{id_col}` AS doc_id_",
-        f"explode({shingles_sql(tokens_sql(f'`{text_col}`'), n)}) AS sh",
+        f"{sql_ident(id_col)} AS doc_id_",
+        f"explode({shingles_sql(tokens_sql(sql_ident(text_col)), n)}) AS sh",
     )
     if hash_fn == "portable":
         base_sql = rolling_fingerprint_sql("sh")
@@ -475,7 +460,8 @@ def simhash_sketches(
     # vote aggregates and the bit-recombine chain are the heaviest
     # expression families in the engine (62 aggregates + a 62-term sum).
     ex = _spread(docs, id_col).selectExpr(
-        f"`{id_col}` AS doc_id_", f"explode({tokens_sql(f'`{text_col}`')}) AS w"
+        f"{sql_ident(id_col)} AS doc_id_",
+        f"explode({tokens_sql(sql_ident(text_col))}) AS w",
     )
     if hash_fn == "portable":
         # one projection computes both halves; aggregates reference the
@@ -501,7 +487,7 @@ def simhash_sketches(
     vote_fields = ", ".join(
         ["'n', count(1)"]
         + [
-            f"'o{off + b}', sum(shiftright({col}, {b}) & 1)"
+            f"{sql_string(f'o{off + b}')}, sum(shiftright({col}, {b}) & 1)"
             for col, nbits, off in halves
             for b in range(nbits)
         ]
@@ -579,9 +565,9 @@ def embedding_dup_pairs(
     """Embedding-cosine near-dup pairs within blocking-key groups.
 
     Norms are computed once per SIDE below the join (same sequential
-    folds as ``cosine()``, so pair scores are bit-identical) — inside
-    the pair expression each row of a B-row block would re-fold its
-    norm B times (the r4 cosine_topk fix, applied family-wide).
+    folds as ``vectors.cosine_topk``, so pair scores are bit-identical)
+    — inside the pair expression each row of a B-row block would re-fold
+    its norm B times (the r4 cosine_topk fix, applied family-wide).
     """
     from hive_plan_service_spark.operators.vectors import (
         cos_div_sql,
@@ -589,18 +575,18 @@ def embedding_dup_pairs(
         norm_sql,
     )
 
-    idq, vecq, blockq = f"`{id_col}`", f"`{vec_col}`", f"`{block_col}`"
+    idq, vecq, blockq = map(sql_ident, (id_col, vec_col, block_col))
     a = embeddings.selectExpr(
         f"{idq} AS vec_a",
-        f"{vecq} AS `_va`",
-        f"{norm_sql(vecq)} AS `_na`",
-        f"{blockq} AS `_block`",
+        f"{vecq} AS _va",
+        f"{norm_sql(vecq)} AS _na",
+        f"{blockq} AS _block",
     )
     b = embeddings.selectExpr(
         f"{idq} AS vec_b",
-        f"{vecq} AS `_vb`",
-        f"{norm_sql(vecq)} AS `_nb`",
-        f"{blockq} AS `_block`",
+        f"{vecq} AS _vb",
+        f"{norm_sql(vecq)} AS _nb",
+        f"{blockq} AS _block",
     )
     return (
         a.join(b, "_block")
@@ -608,8 +594,7 @@ def embedding_dup_pairs(
         .selectExpr(
             "vec_a",
             "vec_b",
-            f"{cos_div_sql(dot_sql('`_va`', '`_vb`'), '`_na`', '`_nb`')}"
-            " AS cos",
+            f"{cos_div_sql(dot_sql('_va', '_vb'), '_na', '_nb')} AS cos",
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -647,10 +632,7 @@ def centroid_blocked_dup_pairs(
         norm_sql,
     )
 
-    # SQL-text construction (r13, the last Column-form score family —
-    # see textops.py's _sql-twin note); identifiers are backtick-quoted
-    # so a keyword/special-char column name still resolves (r12 ADVICE).
-    idq, vecq = f"`{id_col}`", f"`{vec_col}`"
+    idq, vecq = sql_ident(id_col), sql_ident(vec_col)
     # per-side norm precompute (bit-identical scores — see
     # embedding_dup_pairs); `_n` rides along the assignment so the
     # verify stage reuses it instead of re-folding per pair

@@ -45,6 +45,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from hive_plan_service_spark.operators.textops import sql_ident
+
 #: quantization scale: 2^20 (exact power-of-two multiply on doubles)
 SCALE = 1 << 20
 #: offset making quantized components non-negative for |x| < 8
@@ -289,7 +291,7 @@ def kmeans_integer_np(
         # IEEE op sequence (bit-identity pinned by test_kmeans).
         if group_cols:
             gtypes = ", ".join(
-                f"`{c}` {raw.schema[c].dataType.simpleString()}"
+                f"{sql_ident(c)} {raw.schema[c].dataType.simpleString()}"
                 for c in group_cols
             )
             pid_t = raw.schema["_pid"].dataType.simpleString()

@@ -5,12 +5,20 @@ zero Python in the hot path — so it runs unchanged over 100 TB of
 documents. Shingling, fingerprinting and hashing operate on the token
 array *in place* (higher-order functions), deferring any explode until
 an operator genuinely needs row form (e.g. the LSH bucket join).
+
+SQL-text convention (every expression family in operators/): the SQL
+text is the only Spark-side body; callers that need a Column wrap it in
+``F.expr``. One ``F.expr``/``selectExpr`` string is ONE py4j round trip
+at query construction, where each ``F.*`` call costs one or more and a
+higher-order lambda several (b27_dedup_minhash_lsh paid 950 commands
+per construction before the r12–r13 rewrite). In the text, write DOUBLE
+literals with the ``D`` suffix (a bare float parses as DECIMAL); an
+integer literal parses as INT. Builders take SQL expression strings;
+column names and string literals enter the text only through
+:func:`sql_ident` and :func:`sql_string`.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 #: Tiny per-language stopword lists for the language-ID heuristic.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -19,45 +27,38 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "de": ("der", "die", "das", "und", "ist", "ein", "zu"),
 }
 
-ENGLISH_STOPWORDS = LANG_STOPWORDS["en"]
-
 #: Rolling-hash modulus (2^31 − 1, Mersenne prime) and base.
 FNV_MOD = 2_147_483_647
 FNV_BASE = 31
 
 
-def tokens(text: Column | str) -> Column:
-    """Whitespace tokenization — the cheap path for word-soup corpora."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(c, " ")
+def sql_ident(name: str) -> str:
+    """Column name as a SQL identifier: backtick-quoted, embedded
+    backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-# --------------------------------------------------------------------------
-# SQL-text twins of the Column builders below (r12 optimization round).
-#
-# Driver-side query CONSTRUCTION is a real per-invocation cost: every
-# F.* call is one or more py4j round trips, and higher-order lambdas
-# cost several each — profiling b27_dedup_minhash_lsh showed 950 py4j
-# commands (~0.5 s of socket wait) per construction, dominated by the
-# sketch expression builders. A single ``F.expr``/``selectExpr`` string
-# is ONE round trip and parses to the same Catalyst expressions, so the
-# hot sketch operators (operators/dedup.py) assemble their per-hash /
-# per-band expression families as SQL text. Each _sql twin returns the
-# exact SQL spelling of its Column sibling (same functions, same
-# literal types — integer literals parse as INT exactly as Python ints
-# lit to; never write a bare float literal in SQL text, it parses as
-# DECIMAL, use the ``D`` suffix); the portable-hash results stay pinned
-# bit-for-bit by the DuckDB oracles either way.
-# --------------------------------------------------------------------------
+def sql_string(value: str) -> str:
+    """String as a SQL literal. ``\\`` is escaped first (Spark's default
+    literal mode reads it as an escape), then ``'`` is doubled."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def tokens_sql(text: str) -> str:
-    """SQL twin of :func:`tokens` over a column NAME."""
+    """Whitespace tokenization — the cheap path for word-soup corpora."""
     return f"split({text}, ' ')"
 
 
 def shingles_sql(words: str, n: int = 3) -> str:
-    """SQL twin of :func:`shingles` over an array-expression string."""
+    """Distinct word n-gram shingles of a token array (array-side, no
+    explode).
+
+    size ≥ n → indices 0..size−n; shorter docs get one partial shingle.
+    try_element_at, NOT element_at: under ANSI mode (Spark 4 default)
+    element_at THROWS past the array end — a <n-word doc (first seen in
+    stripped clean_text at probe scale) must instead yield NULLs that
+    concat_ws skips, matching the DuckDB oracles' clamped list slice.
+    """
     parts = ", ".join(
         f"try_element_at({words}, i + {k + 1})" for k in range(n)
     )
@@ -68,17 +69,25 @@ def shingles_sql(words: str, n: int = 3) -> str:
 
 
 def rolling_fingerprint_sql(
-    col: str, base: int = FNV_BASE, finish: str | None = None
+    text: str, base: int = FNV_BASE, finish: str | None = None
 ) -> str:
-    """SQL twin of :func:`rolling_fingerprint` over a column NAME.
+    """Polynomial rolling hash of the character stream, mod 2^31−1.
 
-    ``finish`` is a SQL lambda-body template over the accumulator
-    variable spelled ``{acc}`` (e.g. the avalanche in operators/dedup);
-    like the Column form's finish lambda, the variable is a slot
-    re-read, never a fold re-evaluation.
+    Deliberately engine-portable (plain integer arithmetic, no engine
+    hash builtin) so the DuckDB oracle can verify it bit-for-bit; the
+    fast non-portable alternative is ``xxhash64``. ``base`` selects a
+    hash-family member (31 default; 131 gives an independent second hash
+    for the 62-bit portable SimHash).
+
+    ``finish`` is a lambda-body template over the accumulator variable
+    spelled ``{acc}`` (e.g. the avalanche in operators/dedup). It runs
+    in the aggregate's finish lambda, where ``acc`` is a VARIABLE:
+    referencing it many times re-reads a slot instead of re-evaluating
+    the whole fold (pinned by tests/test_plans.py's fold-once plan
+    assertion).
     """
     fold = (
-        f"aggregate(transform(split({col}, ''),"
+        f"aggregate(transform(split({text}, ''),"
         " ch -> CAST(ascii(ch) AS BIGINT)), CAST(0 AS BIGINT),"
         f" (acc, code) -> (acc * {base} + code) % {FNV_MOD}"
     )
@@ -87,74 +96,9 @@ def rolling_fingerprint_sql(
     return fold + ")"
 
 
-def shingles(words: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a token array (array-side, no explode)."""
-    return F.array_distinct(
-        F.transform(
-            # size ≥ n → indices 0..size−n; shorter docs get one partial
-            # shingle. try_element_at, NOT element_at: under ANSI mode
-            # (Spark 4 default) element_at THROWS past the array end —
-            # a <n-word doc (first seen in stripped clean_text at probe
-            # scale) must instead yield NULLs that concat_ws skips,
-            # matching the DuckDB oracles' clamped list slice.
-            F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-            lambda i: F.concat_ws(
-                " ", *[F.try_element_at(words, i + k + 1) for k in range(n)]
-            ),
-        )
-    )
-
-
-def rolling_fingerprint(
-    text: Column | str, base: int = FNV_BASE, finish=None
-) -> Column:
-    """Polynomial rolling hash of the character stream, mod 2^31−1.
-
-    Deliberately engine-portable (plain integer arithmetic, no engine
-    hash builtin) so the DuckDB oracle can verify it bit-for-bit; the
-    fast non-portable alternative is ``F.xxhash64``. ``base`` selects a
-    hash-family member (31 default; 131 gives an independent second hash
-    for the 62-bit portable SimHash).
-
-    ``finish`` (a Column→Column post-map, e.g. an avalanche) runs inside
-    the aggregate's finish lambda, where its argument is the accumulator
-    VARIABLE: referencing it many times re-reads a slot instead of
-    re-evaluating the whole fold (expression-tree duplication would
-    otherwise lean on runtime subexpression elimination to stay cheap —
-    pinned by tests/test_plans.py's fold-once plan assertion).
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    codes = F.transform(F.split(c, ""), lambda ch: F.ascii(ch).cast("bigint"))
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("bigint"),
-        lambda acc, code: (acc * base + code) % FNV_MOD,
-        finish if finish is not None else lambda acc: acc,
-    )
-
-
-def token_hashes(words: Column) -> Column:
-    """xxhash64 of each token — the input to sketch fast paths.
-
-    Caution: consuming this array from multiple lambda expressions lets
-    Catalyst's CollapseProject inline (= re-evaluate) the hashing per
-    consumer; the sketch operators in operators/dedup.py therefore use
-    the explode + partial-aggregate shape instead.
-    """
-    return F.transform(words, lambda w: F.xxhash64(w))
-
-
-def stopword_hits(words: Column, stopwords: tuple[str, ...]) -> Column:
-    """Count of tokens that are in the given stopword list."""
-    arr = F.array(*[F.lit(w) for w in stopwords])
-    return F.size(F.filter(words, lambda w: F.array_contains(arr, w))).cast("bigint")
-
-
 def stopword_hits_sql(words: str, stopwords: tuple[str, ...]) -> str:
-    """SQL twin of :func:`stopword_hits`. Single quotes in stopwords are
-    SQL-escaped ('' — r12 ADVICE: a future apostrophe word like "l'"
-    must not produce a parse error or silently different SQL)."""
-    arr = ", ".join("'{}'".format(w.replace("'", "''")) for w in stopwords)
+    """Count of tokens that are in the given stopword list."""
+    arr = ", ".join(sql_string(w) for w in stopwords)
     return (
         f"CAST(size(filter({words}, w -> array_contains(array({arr}), w)))"
         " AS BIGINT)"

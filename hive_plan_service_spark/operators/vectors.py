@@ -19,38 +19,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from hive_plan_service_spark.operators.textops import sql_ident
 from hive_plan_service_spark.session import apply_wide_row_conf
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product of two float arrays, in DOUBLE."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-# SQL-text twins (r12 optimization round, see operators/textops.py's
-# _sql-twin note): the fold lambdas cost several py4j round trips per
-# F.* call at query-construction time; one expr string parses JVM-side
-# to the same Catalyst expressions. `D` suffix = DOUBLE literal
-# (matching F.lit(0.0) — a bare SQL float parses DECIMAL). Used by the
-# hot per-pair score projections; Column forms stay for composed-
-# expression call sites.
-
-
 def dot_sql(a: str, b: str) -> str:
+    """Sequential-fold dot product of two float arrays, in DOUBLE."""
     return (
         f"aggregate(zip_with({a}, {b},"
         " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -67,16 +41,6 @@ def norm_sql(a: str) -> str:
 
 
 def cos_div_sql(num: str, n1: str, n2: str) -> str:
-    """SQL twin of :func:`cos_div` — the total zero-norm-scores-0.0
-    rule, spelled with the same den-tree duplication as the Column form
-    (lazy CASE, no reachable ANSI divide-by-zero)."""
-    return (
-        f"CASE WHEN ({n1} * {n2}) = 0.0D THEN 0.0D"
-        f" ELSE {num} / ({n1} * {n2}) END"
-    )
-
-
-def cos_div(num: Column, n1: Column, n2: Column) -> Column:
     """Total cosine division: a ZERO-NORM operand yields 0.0.
 
     ANSI mode makes ``/`` throw on a zero divisor (r8 numfuzz: a
@@ -88,12 +52,17 @@ def cos_div(num: Column, n1: Column, n2: Column) -> Column:
     the np twins mirror with a where-guarded divide. The guarded
     branch is lazily evaluated (CASE WHEN), so no throw is reachable.
     """
-    den = n1 * n2
-    return F.when(den == F.lit(0.0), F.lit(0.0)).otherwise(num / den)
+    return (
+        f"CASE WHEN ({n1} * {n2}) = 0.0D THEN 0.0D"
+        f" ELSE {num} / ({n1} * {n2}) END"
+    )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return cos_div(dot(a, b), norm(a), norm(b))
+#: Exact per-pair score over the ``_qvec``/``_cvec`` vectors and their
+#: ``_qn``/``_cn`` norms, the shape every top-k operator below projects.
+_PAIR_COS_SQL = (
+    cos_div_sql(dot_sql("_qvec", "_cvec"), "_qn", "_cn") + " AS cos"
+)
 
 
 def cosine_topk(
@@ -112,32 +81,26 @@ def cosine_topk(
     neighbor id so results are totally deterministic.
     """
     # Norms precomputed BELOW the join (once per row / once per
-    # broadcast query), not inside the pair expression: cosine() as one
-    # expression re-folds both norms per PAIR — 3 array folds instead
-    # of 1 on the q×n hot path. The arithmetic is unchanged
+    # broadcast query), not inside the pair expression: a cosine
+    # written as one expression re-folds both norms per PAIR — 3 array
+    # folds instead of 1 on the q×n hot path. The arithmetic is unchanged
     # (dot / (qn · cn), each factor the same sequential fold), so the
     # float results — and the value-hash oracle — are identical.
+    v = sql_ident(vec)
     q = queries.selectExpr(
-        f"{query_id} AS query_id",
-        f"{vec} AS `_qvec`",
-        f"{norm_sql(vec)} AS `_qn`",
+        f"{sql_ident(query_id)} AS query_id",
+        f"{v} AS _qvec",
+        f"{norm_sql(v)} AS _qn",
     )
     c = corpus.selectExpr(
-        f"{corpus_id} AS neighbor_id",
-        f"{vec} AS `_cvec`",
-        f"{norm_sql(vec)} AS `_cn`",
+        f"{sql_ident(corpus_id)} AS neighbor_id",
+        f"{v} AS _cvec",
+        f"{norm_sql(v)} AS _cn",
     )
     pairs = c.crossJoin(F.broadcast(q))
     if exclude_self:
         pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = (
-        pairs.selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{cos_div_sql(dot_sql('`_qvec`', '`_cvec`'), '`_qn`', '`_cn`')}"
-            " AS cos",
-        )
-    )
+    scored = pairs.selectExpr("query_id", "neighbor_id", _PAIR_COS_SQL)
     w = W.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
     )
@@ -167,22 +130,22 @@ def ivf_assign(
     at 128k vectors in scripts/ann_probe.py.
     """
     # norms once per side below the join (same sequential-fold
-    # arithmetic as cosine(), so scores are bit-identical) — as a pair
+    # arithmetic as cosine_topk, so scores are bit-identical) — as a pair
     # expression each of the O(n·K) assignment rows would re-fold the
     # row norm K× and the centroid norm n× (cosine_topk's r4 fix)
+    v = sql_ident(vec)
     c = centroids.selectExpr(
-        f"{centroid_id} AS `_cid`",
-        f"{vec} AS `_centroid`",
-        f"{norm_sql(vec)} AS `_kn`",
+        f"{sql_ident(centroid_id)} AS _cid",
+        f"{v} AS _centroid",
+        f"{norm_sql(v)} AS _kn",
     )
     scored = (
-        corpus.selectExpr("*", f"{norm_sql(vec)} AS `_vn`")
+        corpus.selectExpr("*", f"{norm_sql(v)} AS _vn")
         .crossJoin(F.broadcast(c))
         .selectExpr(
-            *corpus.columns,
-            "`_cid`",
-            f"{cos_div_sql(dot_sql(vec, '`_centroid`'), '`_vn`', '`_kn`')}"
-            " AS `_cos`",
+            *map(sql_ident, corpus.columns),
+            "_cid",
+            f"{cos_div_sql(dot_sql(v, '_centroid'), '_vn', '_kn')} AS _cos",
         )
     )
     best = (
@@ -214,12 +177,12 @@ def cosine_topk_np(
 
     BIT-IDENTICAL by construction (the ``pq_encode_np`` argument): dot
     and norm accumulate in float64 in the SAME sequential element-order
-    left fold as :func:`dot`/:func:`norm`, the score composes in the
-    same op order (IEEE multiply is exactly commutative, so qn·cn ==
+    left fold as :func:`dot_sql`/:func:`norm_sql`, the score composes in
+    the same op order (IEEE multiply is exactly commutative, so qn·cn ==
     cn·qn bitwise), and the selection order (cos desc, neighbor asc) is
     the exact rank order of the Column path — pinned by
     tests/test_llm_ops.py::test_cosine_topk_np_matches_column. A
-    zero-norm vector scores 0.0 on both paths (``cos_div`` /
+    zero-norm vector scores 0.0 on both paths (``cos_div_sql`` /
     where-guarded numpy divide — r8 zero-vector semantics; NaN would
     sort FIRST in Spark's DESC and last in numpy, so totality is also
     what keeps the twins identical).
@@ -257,7 +220,7 @@ def cosine_topk_np(
     # Arrow/cache batches sized for the corpus row width (invariant 27)
     apply_wide_row_conf(queries.sparkSession, dim * 8)
     qn_acc = np.zeros(nq, dtype=np.float64)
-    for j in range(dim):  # sequential left fold, as norm()
+    for j in range(dim):  # sequential left fold, as norm_sql
         qn_acc += qmat[:, j] * qmat[:, j]
     qn = np.sqrt(qn_acc)
 
@@ -281,7 +244,7 @@ def cosine_topk_np(
                 cn_acc += xj * xj
                 dots += xj[:, None] * qmat[None, :, j]
             # where-guarded divide: zero-norm operand scores 0.0,
-            # bit-matching cos_div's CASE (r8 zero-vector semantics)
+            # bit-matching cos_div_sql's CASE (r8 zero-vector semantics)
             den = np.sqrt(cn_acc)[:, None] * qn[None, :]
             cos = np.divide(
                 dots, den, out=np.zeros_like(dots), where=den != 0
@@ -333,8 +296,8 @@ def ivf_assign_np(
 
     BIT-IDENTICAL by construction (the ``pq_encode_np`` argument):
     dot and norm accumulate in float64 in the SAME sequential
-    element-order left fold as :func:`dot`/:func:`norm` (explicit loop
-    over j — never ``np.sum``), the score is composed in the same op
+    element-order left fold as :func:`dot_sql`/:func:`norm_sql` (explicit
+    loop over j — never ``np.sum``), the score is composed in the same op
     order (``dots / (vn · kn)``), and ``np.argmin`` over centroids
     sorted by id returns the first minimum = ``min(struct(-cos,
     cid))``'s smallest-id tie-break. An all-zero CORPUS row makes every
@@ -369,7 +332,7 @@ def ivf_assign_np(
     # Arrow/cache batches sized for the corpus row width (invariant 27)
     apply_wide_row_conf(corpus.sparkSession, dim * 8)
     kn_acc = np.zeros(kk, dtype=np.float64)
-    for j in range(dim):  # sequential left fold, as norm()
+    for j in range(dim):  # sequential left fold, as norm_sql
         kn_acc += cmat[:, j] * cmat[:, j]
     kn = np.sqrt(kn_acc)
 
@@ -393,7 +356,7 @@ def ivf_assign_np(
                 dots += xj[:, None] * cmat[None, :, j]
             # same op order as the Column score: (vn · kn) then a
             # where-guarded divide (zero-norm operand scores 0.0,
-            # bit-matching cos_div — r8 zero-vector semantics)
+            # bit-matching cos_div_sql — r8 zero-vector semantics)
             den = np.sqrt(vn_acc)[:, None] * kn[None, :]
             neg = -np.divide(
                 dots, den, out=np.zeros_like(dots), where=den != 0
@@ -435,21 +398,21 @@ def ivf_topk(
         )
         .select("query_id", F.col("neighbor_id").alias("centroid_id"))
     )
+    v = sql_ident(vec)
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec).alias("_qvec"),
-        norm(F.col(vec)).alias("_qn"),
+        F.expr(norm_sql(v)).alias("_qn"),
     )
     candidates = (
-        corpus_assigned.withColumn("_cn", norm(F.col(vec)))
+        corpus_assigned.withColumn("_cn", F.expr(norm_sql(v)))
         .join(F.broadcast(probe), "centroid_id")
         .join(F.broadcast(q), "query_id")
         .filter(F.col(id_col) != F.col("query_id"))
         .selectExpr(
             "query_id",
-            f"{id_col} AS neighbor_id",
-            f"{cos_div_sql(dot_sql('`_qvec`', vec), '`_qn`', '`_cn`')}"
-            " AS cos",
+            f"{sql_ident(id_col)} AS neighbor_id",
+            f"{cos_div_sql(dot_sql('_qvec', v), '_qn', '_cn')} AS cos",
         )
     )
     w = W.partitionBy("query_id").orderBy(
@@ -527,7 +490,7 @@ def lsh_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec).alias("_cvec"),
-        norm(F.col(vec)).alias("_cn"),
+        F.expr(norm_sql(sql_ident(vec))).alias("_cn"),
         F.explode(bb).alias("_bb"),
     ).select(
         "neighbor_id", "_cvec", "_cn",
@@ -536,7 +499,7 @@ def lsh_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec).alias("_qvec"),
-        norm(F.col(vec)).alias("_qn"),
+        F.expr(norm_sql(sql_ident(vec))).alias("_qn"),
         F.explode(bb).alias("_bb"),
     ).select(
         "query_id", "_qvec", "_qn",
@@ -547,12 +510,7 @@ def lsh_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "_qvec", "_qn", "_cvec", "_cn")
         .dropDuplicates(["query_id", "neighbor_id"])
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{cos_div_sql(dot_sql('`_qvec`', '`_cvec`'), '`_qn`', '`_cn`')}"
-            " AS cos",
-        )
+        .selectExpr("query_id", "neighbor_id", _PAIR_COS_SQL)
     )
     w = W.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
@@ -1002,27 +960,23 @@ def pq_topk_refined(
         subspaces=subspaces,
         dim=dim,
     ).select("query_id", "neighbor_id")
+    v = sql_ident(vec)
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec).alias("_qvec"),
-        norm(F.col(vec)).alias("_qn"),
+        F.expr(norm_sql(v)).alias("_qn"),
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec).alias("_cvec"),
-        norm(F.col(vec)).alias("_cn"),
+        F.expr(norm_sql(v)).alias("_cn"),
     )
     # shortlist is |queries|·shortlist rows — fixed-size; corpus side
     # joins by id (no broadcast hint on the SF-proportional corpus)
     rer = (
         short.join(F.broadcast(q), "query_id")
         .join(c, "neighbor_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{cos_div_sql(dot_sql('`_qvec`', '`_cvec`'), '`_qn`', '`_cn`')}"
-            " AS cos",
-        )
+        .selectExpr("query_id", "neighbor_id", _PAIR_COS_SQL)
     )
     w = W.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()

@@ -69,7 +69,7 @@ def _ngrams_all(ws: Column, n: int) -> Column:
 
     try_element_at: a <n-word doc yields one partial n-gram (concat_ws
     skips the out-of-range NULLs), matching the oracles' clamped list
-    slice — ANSI element_at would throw instead (textops.shingles has
+    slice — ANSI element_at would throw instead (textops.shingles_sql has
     the same guard and the war story).
     """
     return F.transform(

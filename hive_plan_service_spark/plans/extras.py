@@ -313,7 +313,8 @@ def b11_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMV_K = 512
 _HIST_BIN_CENTS = 8192
 
-# Inline SQL twin of operators.dedup._portable_avalanche over a BIGINT key.
+# DuckDB mirror of operators.dedup._AVALANCHE_SQL over a BIGINT key (the
+# oracle's independent spelling; the Spark side uses dedup's template).
 _AVALANCHE_SQL = (
     "((((({key} % 2147483647) + 700000001) * (({key} % 2147483647) + 700000001))"
     " % 2147483647 + 700000001)"
@@ -376,14 +377,14 @@ _AVALANCHE_SQL = (
 def b11_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from hive_plan_service_spark.operators.dedup import _portable_avalanche
+    from hive_plan_service_spark.operators.dedup import _AVALANCHE_SQL as ava
 
     register_tables(spark, sf_dir)
     orders = spark.table("orders")
 
     hashed = orders.select(
         "o_orderstatus",
-        _portable_avalanche(F.col("o_custkey") % F.lit(2147483647)).alias("h"),
+        F.expr(ava.format(acc="(o_custkey % 2147483647)")).alias("h"),
     ).dropDuplicates(["o_orderstatus", "h"])
     w = Window.partitionBy("o_orderstatus").orderBy("h")
     kmv = (

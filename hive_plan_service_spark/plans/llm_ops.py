@@ -20,11 +20,8 @@ from hive_plan_service_spark.operators import multimodal as mm
 from hive_plan_service_spark.operators import vectors as vx
 from hive_plan_service_spark.operators.textops import (
     LANG_STOPWORDS,
-    rolling_fingerprint,
     rolling_fingerprint_sql,
-    stopword_hits,
     stopword_hits_sql,
-    tokens,
     tokens_sql,
 )
 from hive_plan_service_spark.plans.curation_ops import DUCK_STRIP_CTES
@@ -52,7 +49,7 @@ _DUCK_NORM_PROD = (
     " i -> {b}.embedding[i]::DOUBLE * {b}.embedding[i]::DOUBLE)), (x, y) -> x + y)))"
 )
 
-#: total cosine, mirroring operators.vectors.cos_div: a ZERO-NORM
+#: total cosine, mirroring operators.vectors.cos_div_sql: a ZERO-NORM
 #: operand scores 0.0 (DuckDB's double / 0 yields inf/nan silently,
 #: Spark ANSI throws — both replaced by the same guarded 0.0; r8
 #: zero-vector semantics)
@@ -83,7 +80,7 @@ _DUCK_COS = (
 def b29_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_tables(spark, sf_dir)
     d = spark.table("documents")
-    w = tokens("text")
+    w = F.expr(tokens_sql("text"))
     return d.select(
         "doc_id",
         F.size(w).cast("bigint").alias("n_words"),
@@ -120,15 +117,14 @@ def b29_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def b29_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_tables(spark, sf_dir)
-    d = spark.table("documents").select(
-        "doc_id", "text", tokens("text").alias("ws")
+    d = spark.table("documents").selectExpr(
+        "doc_id", "text", f"{tokens_sql('text')} AS ws"
     )
     n = F.size("ws")
+    hits = F.expr(stopword_hits_sql("ws", LANG_STOPWORDS["en"]))
     return d.select(
         "doc_id",
-        (stopword_hits(F.col("ws"), LANG_STOPWORDS["en"]).cast("double") / n).alias(
-            "stopword_ratio"
-        ),
+        (hits.cast("double") / n).alias("stopword_ratio"),
         (
             F.size(F.filter(F.col("ws"), lambda w: F.length(w) > 6)).cast("double")
             / n
@@ -168,11 +164,11 @@ def b29_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def b29_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_tables(spark, sf_dir)
-    d = spark.table("documents").select(
-        "doc_id", F.col("lang"), tokens("text").alias("ws")
+    d = spark.table("documents").selectExpr(
+        "doc_id", "lang", f"{tokens_sql('text')} AS ws"
     )
     h = {
-        code: stopword_hits(F.col("ws"), words)
+        code: F.expr(stopword_hits_sql("ws", words))
         for code, words in LANG_STOPWORDS.items()
     }
     return d.select(
@@ -208,8 +204,8 @@ def b29_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def b29_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_tables(spark, sf_dir)
-    return spark.table("documents").select(
-        "doc_id", rolling_fingerprint("text").alias("fingerprint")
+    return spark.table("documents").selectExpr(
+        "doc_id", f"{rolling_fingerprint_sql('text')} AS fingerprint"
     )
 
 
@@ -770,7 +766,7 @@ def llm_corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round trips per invocation (3 stopword-filter lambdas + the
     # per-char fingerprint fold built via F.* Columns) — selectExpr
     # parses the identical expressions JVM-side in one trip
-    # (operators/textops.py's _sql-twin note).
+    # (operators/textops.py's SQL-text convention).
     base = docs.selectExpr(
         "doc_id", "text", f"{tokens_sql('text')} AS ws"
     )
@@ -823,7 +819,7 @@ def b29_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_tables(spark, sf_dir)
     docs = spark.table("documents")
-    tok = docs.select("doc_id", F.explode(tokens("text")).alias("word"))
+    tok = docs.selectExpr("doc_id", f"explode({tokens_sql('text')}) AS word")
     tf = tok.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     # df derived FROM tf (one row per (doc, word), so a plain count IS
     # countDistinct(doc_id)) — drops the expand-plan distinct
@@ -1106,7 +1102,9 @@ def b30_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_tables(spark, sf_dir)
-    d = spark.table("documents").select("doc_id", tokens("text").alias("ws"))
+    d = spark.table("documents").selectExpr(
+        "doc_id", f"{tokens_sql('text')} AS ws"
+    )
     n_chunks = F.greatest(
         F.ceil((F.size("ws") - F.lit(32)) / F.lit(24.0)).cast("bigint") + 1,
         F.lit(1).cast("bigint"),
@@ -1177,7 +1175,7 @@ def _pack_sharded(docs: DataFrame, shards: int = 32) -> DataFrame:
 
     t = docs.select(
         "doc_id",
-        F.size(tokens("text")).alias("n_words"),
+        F.size(F.expr(tokens_sql("text"))).alias("n_words"),
         (F.col("doc_id") % shards).alias("shard"),
     )
     w = (
@@ -1210,7 +1208,7 @@ def _pack_sharded(docs: DataFrame, shards: int = 32) -> DataFrame:
 def _duck_lsh_hyperplane() -> str:
     """DuckDB mirror of lsh_topk(planes=16, bands=4, dim=64, k=5)."""
 
-    def dot(p: int) -> str:
+    def plane_dot(p: int) -> str:
         # identical fold order + arithmetic as _plane_fold: left fold over
         # j = 0..63 of emb[j+1] * ((((j + p*64 + 1) * 2654435761)
         # % (2^31-1)) % 2001 - 1000) / 1000.0
@@ -1223,7 +1221,7 @@ def _duck_lsh_hyperplane() -> str:
 
     def bucket(band: int) -> str:
         return " + ".join(
-            f"CASE WHEN {dot(band * 4 + i)} > 0 THEN {1 << i} ELSE 0 END"
+            f"CASE WHEN {plane_dot(band * 4 + i)} > 0 THEN {1 << i} ELSE 0 END"
             for i in range(4)
         )
 

@@ -351,12 +351,19 @@ def apply_wide_row_conf(spark: SparkSession, row_bytes: int) -> dict:
 
 def conf_overrides() -> dict[str, str]:
     """Probe hook: ``SPARK_GRAFT_CONF_OVERRIDES="k=v;k=v"`` wins over
-    ``_RUNTIME_CONF`` on EVERY ``tune()`` application. The plan-variance
-    gates (run_gates ``aqeoff`` / ``nobroadcast``) re-run the full
-    canonical oracle sweep under a different physical-plan regime; a
-    bare ``spark.conf.set`` after session build is not enough because
-    internal ``tune()`` calls (register_tables, streaming sources)
-    would silently reset the conf mid-sweep."""
+    ``_RUNTIME_CONF`` on EVERY full ``tune()`` application. The
+    plan-variance gates (run_gates ``aqeoff`` / ``nobroadcast``) re-run
+    the full canonical oracle sweep under a different physical-plan
+    regime through this hook, which is part of the memo token: changing
+    it re-tunes in full.
+
+    A bare ``spark.conf.set`` of a tune-managed key is NOT reset by the
+    internal ``tune()`` calls (register_tables, streaming sources): a
+    session already tuned under the same token skips re-application, so
+    the out-of-band value persists until ``tune(spark, force=True)``
+    (pinned by tests/test_session_scratch.py). Entry points that must
+    start from the engine conf force-tune once after building the
+    session, as scripts/driver_sim.py does."""
     raw = os.environ.get("SPARK_GRAFT_CONF_OVERRIDES", "")
     out: dict[str, str] = {}
     for kv in raw.split(";"):

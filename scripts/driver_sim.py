@@ -67,7 +67,7 @@ for k, v in builder_conf:
     # fail loudly rather than certify an axis that never engaged
     got = spark.conf.get(k, None)
     assert got == v, f"builder conf {k} did not take: {got!r} != {v!r}"
-tune(spark)
+tune(spark, force=True)
 
 qs = all_queries()
 fail = 0

@@ -106,7 +106,8 @@ import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: Soft wall budget for the full matrix (VERDICT r10 #3). The stamp has
+#: Wall budget for the full matrix (VERDICT r10 #3); a run over it
+#: reports ``ok: false`` and exits non-zero. The stamp has
 #: grown every round (r8 34 gates, r9 35 ≈ 4,900 s, r10 40 = 5,778 s);
 #: per-gate walls are carried in the artifact (`wall_s`) so growth is
 #: attributable, and the newest artifact's total is pinned under this
@@ -434,15 +435,16 @@ def main() -> None:
             print(f"    wrote {path}", flush=True)
 
     total_wall = round(sum(r["wall_s"] for r in results.values()), 1)
-    if total_wall > STAMP_WALL_BUDGET_S:
+    over_budget = total_wall > STAMP_WALL_BUDGET_S
+    if over_budget:
         print(
-            f"WARNING: matrix wall {total_wall}s exceeds the "
-            f"{STAMP_WALL_BUDGET_S}s budget — raise STAMP_WALL_BUDGET_S "
-            "consciously or trim gates (VERDICT r10 #3)",
+            f"FAIL: matrix wall {total_wall}s exceeds the "
+            f"{STAMP_WALL_BUDGET_S}s budget — trim gates, or raise "
+            "STAMP_WALL_BUDGET_S with a written reason (VERDICT r10 #3)",
             flush=True,
         )
     summary = {
-        "ok": all(r["ok"] for r in results.values()),
+        "ok": not over_budget and all(r["ok"] for r in results.values()),
         "gates": results,
         "total_wall_s": total_wall,
         "wall_budget_s": STAMP_WALL_BUDGET_S,

@@ -231,3 +231,30 @@ def test_latest_gates_artifact_covers_every_defined_gate():
         )
         walls = {g: r["wall_s"] for g, r in artifact["gates"].items()}
         assert all(isinstance(w, (int, float)) for w in walls.values())
+
+
+def test_over_budget_matrix_is_not_green(monkeypatch, capsys):
+    """run_gates: a matrix whose total wall exceeds STAMP_WALL_BUDGET_S
+    reports ``ok: false`` and exits non-zero even when every gate
+    passed, so an over-budget stamp cannot be committed as green."""
+    import os
+    import sys
+
+    import pytest
+
+    sys.path.insert(0, os.path.join(os.path.dirname(bench.__file__), "scripts"))
+    import run_gates
+
+    monkeypatch.setattr(
+        run_gates, "GATES", {"noop": [sys.executable, "-c", "print('ok')"]}
+    )
+    monkeypatch.setattr(run_gates, "GATE_ENV", {})
+    monkeypatch.setattr(sys, "argv", ["run_gates.py"])
+    for budget, rc in ((-1, 1), (run_gates.STAMP_WALL_BUDGET_S, 0)):
+        monkeypatch.setattr(run_gates, "STAMP_WALL_BUDGET_S", budget)
+        with pytest.raises(SystemExit) as exit_info:
+            run_gates.main()
+        assert exit_info.value.code == rc
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert summary["ok"] is (rc == 0)
+        assert summary["gates"]["noop"]["ok"]

@@ -236,6 +236,39 @@ def test_ivf_kmeans_recall(spark, sf_dir):
     assert len(truth & approx) / len(truth) >= 0.2
 
 
+def test_vector_operators_quote_column_names(spark, sf_dir):
+    """Caller column names reach the SQL text only through
+    textops.sql_ident: with the vector and id columns renamed to names
+    that need quoting, cosine_topk and ivf_assign return the same rows
+    as under the default names."""
+    register_tables(spark, sf_dir)
+    emb = spark.table("embeddings")
+    odd = emb.withColumnRenamed("embedding", "emb vec").withColumnRenamed(
+        "vec_id", "vec id"
+    )
+    queries = emb.filter(F.col("vec_id") < 5)
+    odd_queries = odd.filter(F.col("vec id") < 5)
+    assert sorted(vx.cosine_topk(queries, emb, k=5).collect()) == sorted(
+        vx.cosine_topk(
+            odd_queries, odd, k=5, query_id="vec id", corpus_id="vec id",
+            vec="emb vec",
+        ).collect()
+    )
+    centroids = emb.filter(F.col("vec_id") % 97 == 0).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+    odd_centroids = centroids.withColumnRenamed("embedding", "emb vec")
+    assert sorted(
+        (r["vec_id"], r["centroid_id"])
+        for r in vx.ivf_assign(emb, centroids).collect()
+    ) == sorted(
+        (r["vec id"], r["centroid_id"])
+        for r in vx.ivf_assign(
+            odd, odd_centroids, vec="emb vec", id_col="vec id"
+        ).collect()
+    )
+
+
 def test_lsh_hyperplane_recall(spark, sf_dir):
     register_tables(spark, sf_dir)
     emb = spark.table("embeddings")

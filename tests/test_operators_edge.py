@@ -327,7 +327,10 @@ def test_shingles_and_ngrams_short_docs_yield_partial_gram(spark):
     equal the DuckDB oracles' clamped list slice: the joined words that
     exist, no trailing separators.
     """
-    from hive_plan_service_spark.operators.textops import shingles, tokens
+    from hive_plan_service_spark.operators.textops import (
+        shingles_sql,
+        tokens_sql,
+    )
     from hive_plan_service_spark.plans.curation_ops import _ngrams_all
 
     docs = spark.createDataFrame(
@@ -337,7 +340,7 @@ def test_shingles_and_ngrams_short_docs_yield_partial_gram(spark):
     rows = {
         r["doc_id"]: r["sh"]
         for r in docs.select(
-            "doc_id", shingles(tokens("text"), 3).alias("sh")
+            "doc_id", F.expr(shingles_sql(tokens_sql("text"), 3)).alias("sh")
         ).collect()
     }
     assert rows[1] == ["alpha beta"]
@@ -384,3 +387,19 @@ def test_cosine_topk_np_rejects_corpus_sized_query_batch(spark, sf_dir, monkeypa
     emb = spark.table("embeddings")
     with pytest.raises(ValueError, match="fixed-size cap"):
         vx.cosine_topk_np(emb, emb, k=3)
+
+
+def test_stopword_hits_sql_counts_quote_and_backslash_words(spark):
+    """Stopword literals go through textops.sql_string: an apostrophe
+    word and a backslash word count exactly as in plain Python. Spark's
+    default literal mode reads a bare ``\\`` as an escape, so an
+    unescaped ``'a\\b'`` would silently match the backspace string."""
+    from hive_plan_service_spark.operators.textops import stopword_hits_sql
+
+    stopwords = ("l'", "a\\b")
+    words = ["l'", "a\\b", "ab", "a\\b", "l", "a\b", "l''"]
+    df = spark.createDataFrame([(words,)], "ws array<string>")
+    got = df.select(
+        F.expr(stopword_hits_sql("ws", stopwords)).alias("n")
+    ).first()["n"]
+    assert got == sum(w in stopwords for w in words) == 3

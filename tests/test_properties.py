@@ -297,12 +297,15 @@ _FUZZ_TOKENS = ["", "a", "b", "ab", "x1", "é", "日本", "word" * 8]
 def test_shingles_and_ngrams_match_python_model_on_degenerate_docs(
     spark, docs, n
 ):
-    """shingles / _ngrams_all vs the trivially-correct Python model of
+    """shingles_sql / _ngrams_all vs the trivially-correct Python model of
     the DuckDB oracles' clamped list slice, on adversarial docs: empty
     texts, sub-n-word docs (the ANSI element_at crash class fixed in
     round 5), empty tokens from consecutive spaces, unicode.
     """
-    from hive_plan_service_spark.operators.textops import shingles, tokens
+    from hive_plan_service_spark.operators.textops import (
+        shingles_sql,
+        tokens_sql,
+    )
     from hive_plan_service_spark.plans.curation_ops import _ngrams_all
 
     from pyspark.sql import functions as F
@@ -324,7 +327,7 @@ def test_shingles_and_ngrams_match_python_model_on_degenerate_docs(
         r["doc_id"]: (r["sh"], r["gr"])
         for r in df.select(
             "doc_id",
-            shingles(tokens("text"), n).alias("sh"),
+            F.expr(shingles_sql(tokens_sql("text"), n)).alias("sh"),
             _ngrams_all(F.split("text", " "), n).alias("gr"),
         ).collect()
     }

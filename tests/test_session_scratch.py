@@ -102,3 +102,21 @@ def test_tune_applies_and_survives_reapplication(spark, monkeypatch):
         session.tune(spark)
         assert spark.conf.get("spark.sql.adaptive.enabled") == orig_aqe
         assert spark.conf.get("spark.sql.shuffle.partitions") == orig_shuf
+
+
+def test_tune_memo_keeps_out_of_band_conf_until_forced(spark):
+    """The tune() memo contract: a tune-managed key set out of band
+    (here the session time zone) survives a plain tune() under an
+    unchanged override token — the memo skips re-application — and
+    ``tune(spark, force=True)`` restores the engine value."""
+    key = "spark.sql.session.timeZone"
+    session.tune(spark, force=True)
+    assert spark.conf.get(key) == "UTC"
+    try:
+        spark.conf.set(key, "America/New_York")
+        session.tune(spark)
+        assert spark.conf.get(key) == "America/New_York"
+        session.tune(spark, force=True)
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        session.tune(spark, force=True)

@@ -127,7 +127,7 @@ def ivf_assign(
     the recall/probe-cost target — never derived linearly from corpus
     size: assignment is O(n·K) cosines, so n-proportional seeding
     (fine for tiny fixtures) degrades to O(n²) — measured 115 s vs 12 s
-    at 128k vectors in scripts/ann_probe.py.
+    at 128k vectors (``git show ad4964a:scripts/ann_probe.py``).
     """
     # norms once per side below the join (same sequential-fold
     # arithmetic as cosine_topk, so scores are bit-identical) — as a pair

@@ -32,16 +32,6 @@ BOILERPLATE_DF = 3
 #: published choice for benchmark-overlap filtering).
 DECONTAM_N = 8
 
-#: Production shuffle-width knob: join/aggregate segment and shingle
-#: stages on ``xxhash64(key)`` (8 bytes) instead of the raw ~50–200-byte
-#: strings. Membership is identical up to 64-bit collisions (~1e-7 at a
-#: billion keys) but the DuckDB oracle cannot reproduce xxhash64, so the
-#: registered queries keep string keys and this flag stays False except
-#: under scripts/curation_probe.py --hash-keys (and would be True on a
-#: real 100 TB run).
-HASH_JOIN_KEYS = False
-
-
 def _segments(ws: Column) -> Column:
     """Non-overlapping SEGMENT_TOKENS-wide chunks of a token array.
 
@@ -149,18 +139,13 @@ def llm_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", _segments(F.split("text", " ")).alias("segs"))
     )
     segs = d.select("doc_id", F.posexplode("segs").alias("pos", "seg"))
-    # string key keeps the oracle engine-portable; the hashed variant
-    # shuffles 8-byte keys through the frequency aggregate instead of
-    # full segments (HASH_JOIN_KEYS docstring)
-    key = "seg"
-    if HASH_JOIN_KEYS:
-        segs = segs.withColumn("segk", F.xxhash64("seg"))
-        key = "segk"
-    doc_freq = segs.select(key, "doc_id").groupBy(key).agg(
+    # string key keeps the oracle engine-portable (DuckDB cannot
+    # reproduce xxhash64)
+    doc_freq = segs.select("seg", "doc_id").groupBy("seg").agg(
         F.countDistinct("doc_id").alias("doc_freq")
     )
     kept = (
-        segs.join(doc_freq, key)
+        segs.join(doc_freq, "seg")
         .filter(F.col("doc_freq") < BOILERPLATE_DF)
         .groupBy("doc_id")
         .agg(
@@ -239,11 +224,6 @@ def llm_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sh"),
         )
     )
-    if HASH_JOIN_KEYS:
-        # project to the hash right after the explode: the join then
-        # shuffles 8-byte keys, the shingle strings never leave the map
-        # side (HASH_JOIN_KEYS docstring)
-        d = d.select("doc_id", F.xxhash64("sh").alias("sh"))
     train = d.filter(F.col("doc_id") % 10 != 0)
     ev = d.filter(F.col("doc_id") % 10 == 0).withColumnRenamed(
         "doc_id", "eval_doc_id"
@@ -851,8 +831,6 @@ def llm_pretrain_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sh"
         ),
     )
-    if HASH_JOIN_KEYS:
-        g8 = g8.select("doc_id", F.xxhash64("sh").alias("sh"))
     ev = g8.filter(F.col("doc_id") % 10 == 0).select("sh").distinct()
     contam = (
         g8.filter(F.col("doc_id") % 10 != 0)

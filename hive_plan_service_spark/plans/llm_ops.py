@@ -610,7 +610,7 @@ def b28_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.table("embeddings")
     # % 97 yields a fixture-appropriate K (~6 buckets on 500 vectors).
     # Production fixes K independent of n (assignment is O(n·K) — see
-    # ivf_assign docstring and scripts/ann_probe.py); the k-means
+    # ivf_assign docstring); the k-means
     # variant below trains a fixed K the production way.
     centroids = emb.filter(F.col("vec_id") % 97 == 0).select(
         F.col("vec_id").alias("centroid_id"), "embedding"

@@ -1,6 +1,7 @@
 """Heap-safe parquet writing for wide rows (vector/array columns).
 
-Found by the r6 spill certification (scripts/spill_probe.py): writing a
+Found by the r6 spill certification (``git show
+ad4964a:scripts/spill_probe.py``): writing a
 1M × 768-dim float corpus under a 4 GiB heap killed the JVM with
 ``java.lang.OutOfMemoryError`` in the WRITE stage — not a shuffle or
 aggregation. The parquet writer buffers a full row group PER TASK on

@@ -27,7 +27,6 @@ human-readable table.
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
 import shutil
@@ -38,107 +37,9 @@ import time
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
-
-def _scope_label(si: dict) -> str:
-    """Human-readable stage label from RDD scopes: the operator names
-    (WholeStageCodegen / Exchange / MapInPandas / ...) beat the generic
-    callsite in "Stage Name"."""
-    names: list[str] = []
-    for rdd in si.get("RDD Info", []):
-        scope = rdd.get("Scope")
-        if not scope:
-            continue
-        try:
-            nm = json.loads(scope).get("name", "")
-        except (json.JSONDecodeError, TypeError):
-            continue
-        if nm and nm not in names:
-            names.append(nm)
-    return " | ".join(names[:5]) or si.get("Stage Name", "")[:60]
-
-
-def parse_stages(log_dir: str, t_min_ms: int) -> list[dict]:
-    """Stage table from a (rolling or flat) plain-JSON event log,
-    restricted to stages submitted at/after ``t_min_ms``.
-
-    Two passes: TaskEnd events are logged BEFORE their stage's
-    StageCompleted event, so task metrics accumulate independently
-    keyed by stage id and join the stage rows at the end."""
-    files: list[str] = []
-    for p in glob.glob(os.path.join(log_dir, "*")):
-        if os.path.isdir(p):
-            files.extend(glob.glob(os.path.join(p, "events_*")))
-        elif not p.endswith(".inprogress"):
-            files.append(p)
-
-    stages: dict[int, dict] = {}
-    acc: dict[int, dict] = {}
-    for path in sorted(files):
-        with open(path, errors="replace") as f:
-            for line in f:
-                if '"SparkListenerStageCompleted"' in line:
-                    try:
-                        si = json.loads(line)["Stage Info"]
-                    except (json.JSONDecodeError, KeyError):
-                        continue
-                    if si.get("Submission Time", 0) < t_min_ms:
-                        continue
-                    stages[si["Stage ID"]] = {
-                        "stage": si["Stage ID"],
-                        "name": _scope_label(si)[:80],
-                        "tasks": si.get("Number of Tasks", 0),
-                        "wall_s": round(
-                            (si.get("Completion Time", 0)
-                             - si.get("Submission Time", 0)) / 1e3, 2
-                        ),
-                    }
-                elif '"SparkListenerTaskEnd"' in line:
-                    try:
-                        ev = json.loads(line)
-                    except json.JSONDecodeError:
-                        continue
-                    tm = ev.get("Task Metrics") or {}
-                    if not tm:
-                        continue
-                    a = acc.setdefault(ev.get("Stage ID"), {
-                        "task_time_s": 0.0, "cpu_s": 0.0, "max_task_s": 0.0,
-                        "input_mb": 0.0, "shuf_read_mb": 0.0,
-                        "shuf_write_mb": 0.0, "_runs": [],
-                    })
-                    run_s = tm.get("Executor Run Time", 0) / 1e3
-                    a["task_time_s"] += run_s
-                    if len(a["_runs"]) < 100_000:  # bound memory
-                        a["_runs"].append(run_s)
-                    a["cpu_s"] += tm.get("Executor CPU Time", 0) / 1e9
-                    a["max_task_s"] = max(a["max_task_s"], run_s)
-                    a["input_mb"] += (
-                        (tm.get("Input Metrics") or {}).get("Bytes Read", 0)
-                        / 1024**2
-                    )
-                    srm = tm.get("Shuffle Read Metrics") or {}
-                    a["shuf_read_mb"] += (
-                        srm.get("Remote Bytes Read", 0)
-                        + srm.get("Local Bytes Read", 0)
-                    ) / 1024**2
-                    a["shuf_write_mb"] += (
-                        (tm.get("Shuffle Write Metrics") or {})
-                        .get("Shuffle Bytes Written", 0) / 1024**2
-                    )
-    for sid, st in stages.items():
-        a = acc.get(sid, {})
-        for k in ("task_time_s", "cpu_s", "max_task_s", "input_mb",
-                  "shuf_read_mb", "shuf_write_mb"):
-            st[k] = round(a.get(k, 0.0), 2)
-        # straggler evidence (r8 skew attribution): a healthy stage
-        # keeps max/median under ~5x; a hot shuffle key shows up here
-        # long before it shows up in wall-clock
-        runs = sorted(a.get("_runs", []))
-        med = runs[len(runs) // 2] if runs else 0.0
-        st["p50_task_s"] = round(med, 3)
-        st["max_over_median"] = (
-            round(st["max_task_s"] / med, 1) if med > 0.02 else None
-        )
-    return sorted(stages.values(), key=lambda s: -s["task_time_s"])
+# parse_stages is part of this module's interface (perfbench's traced
+# run imports it from here)
+from scripts.probekit import mult_docs, parse_stages  # noqa: E402
 
 
 def main() -> None:
@@ -184,28 +85,9 @@ def main() -> None:
 
     docs_path = None
     if args.mult > 1 and not args.extbench:
-        base = spark.table("documents")
-        n = base.count()
-        reps = spark.range(args.mult).select(F.col("id").alias("_rep"))
-        out = (
-            base.crossJoin(reps)
-            .withColumn("doc_id", F.col("doc_id") + F.col("_rep") * F.lit(n))
-            .withColumn(
-                "text",
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.split(F.col("text"), " "),
-                        lambda w: F.concat(
-                            w, F.lit("_"), F.col("_rep").cast("string")
-                        ),
-                    ),
-                ),
-            )
-            .drop("_rep")
-        )
+        out = mult_docs(spark, args.mult)
         if args.skew:
-            hot_source = base.select("source").first()[0]
+            hot_source = spark.table("documents").select("source").first()[0]
             boiler = " ".join(
                 f"boilerplate{i} legal footer common all rights reserved"
                 for i in range(12)
@@ -236,7 +118,7 @@ def main() -> None:
         # bodies bench_extended times, over its distinct-jitter embedding
         # fixture, so the stage table attributes exactly what the
         # EXTBENCH_rNN artifact measures.
-        from scripts.bench_extended import _mult_embeddings
+        from bench_extended import _mult_embeddings
 
         from hive_plan_service_spark.operators import vectors as vx
         from hive_plan_service_spark.operators.kmeans import kmeans_integer_np

@@ -13,9 +13,8 @@ divide out box load identically.
 Scale: corpora are replicated from the sf0.1 fixtures as DISTINCT
 content (per-copy word suffix / vector jitter — invariant 23) and
 materialized to scratch parquet BEFORE timing, so the timed region
-reads from storage like production. Default multipliers keep the whole
-artifact under ~3 minutes on a quiet box; raise via env for deeper
-probes (SPARK_GRAFT_EXT_DOCS_MULT / SPARK_GRAFT_EXT_EMB_MULT).
+reads from storage like production. The multipliers (DOCS_MULT,
+EMB_MULT) keep the whole artifact under ~3 minutes on a quiet box.
 
 Timing: min-of-2 full materializations per shape (run 1 doubles as the
 codegen/JIT warm-up — these shapes are too heavy for bench.py's
@@ -29,84 +28,39 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import sys
 import time
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO_ROOT not in sys.path:
-    sys.path.insert(0, REPO_ROOT)
+import probekit  # first: puts the repo root on sys.path
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import functions as F
 
-import bench  # noqa: E402 — reuse calibrate() + the quiet reference
-from hive_plan_service_spark.session import (  # noqa: E402
+import bench  # reuse calibrate() + the quiet reference
+from hive_plan_service_spark.session import (
     default_parallelism,
     get_spark,
     process_scratch_dir,
 )
-from hive_plan_service_spark.sources.catalog import register_tables  # noqa: E402
-from hive_plan_service_spark.sources.writers import write_parquet_heap_safe  # noqa: E402
+from hive_plan_service_spark.sources.catalog import register_tables
+from hive_plan_service_spark.sources.writers import write_parquet_heap_safe
 
-DOCS_MULT = int(os.environ.get("SPARK_GRAFT_EXT_DOCS_MULT", "8"))
-EMB_MULT = int(os.environ.get("SPARK_GRAFT_EXT_EMB_MULT", "50"))
+DOCS_MULT = 8
+EMB_MULT = 50
 
 
 def _mult_docs(spark, mult: int) -> str:
-    """mult× documents, textually disjoint per copy (scale_probe's rule:
-    '_<rep>' word suffix — a bare digit suffix aliases digit-ending
-    tokens across copies)."""
-    base = spark.table("documents")
-    n = base.count()
-    reps = spark.range(mult).select(F.col("id").alias("_rep"))
-    out = (
-        base.crossJoin(reps)
-        .withColumn("doc_id", F.col("doc_id") + F.col("_rep") * F.lit(n))
-        .withColumn(
-            "text",
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.split(F.col("text"), " "),
-                    lambda w: F.concat(
-                        w, F.lit("_"), F.col("_rep").cast("string")
-                    ),
-                ),
-            ),
-        )
-        .drop("_rep")
-    )
+    """mult× documents (``probekit.mult_docs``), written to scratch."""
     path = os.path.join(process_scratch_dir("bench_ext"), f"docs_{mult}")
-    out.repartition(default_parallelism()).write.mode("overwrite").parquet(path)
+    probekit.mult_docs(spark, mult).repartition(default_parallelism()).write.mode(
+        "overwrite").parquet(path)
     return path
 
 
 def _mult_embeddings(spark, mult: int) -> str:
-    """mult× embeddings with deterministic per-(vector, element) jitter
-    (ann_probe's rule) — copies are distinct but neighborhood-preserving."""
-    base = spark.table("embeddings")
-    n = base.count()
-    reps = spark.range(mult).select(F.col("id").alias("_rep"))
-    out = (
-        base.crossJoin(reps)
-        .withColumn("vec_id", F.col("vec_id") + F.col("_rep") * F.lit(n))
-        .withColumn(
-            "embedding",
-            F.transform(
-                "embedding",
-                lambda x, i: (
-                    x.cast("double")
-                    + F.pmod(F.xxhash64(F.col("vec_id"), i), F.lit(1000)).cast(
-                        "double"
-                    )
-                    / F.lit(10000.0)
-                    - F.lit(0.05)
-                ).cast("float"),
-            ),
-        )
-        .drop("_rep")
-    )
+    """mult× embeddings (``probekit.mult_embeddings``), written to scratch."""
     path = os.path.join(process_scratch_dir("bench_ext"), f"emb_{mult}")
-    write_parquet_heap_safe(out.repartition(default_parallelism()), path)
+    write_parquet_heap_safe(
+        probekit.mult_embeddings(spark, mult).repartition(default_parallelism()),
+        path)
     return path
 
 

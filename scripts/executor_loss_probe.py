@@ -40,20 +40,16 @@ import os
 import shutil
 import signal
 import subprocess
-import sys
 import threading
 import time
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO_ROOT)
-sys.path.insert(0, os.path.join(REPO_ROOT, "tests"))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import localcluster_probe as lc  # session, fixtures and shapes
+import probekit
 
-# default topology: 3 workers so one kill leaves 2 live executors and
-# the relaunch is observable; worker memory sized for the 2× shapes
-os.environ.setdefault("SPARK_GRAFT_LC_MASTER", "local-cluster[3,4,2560]")
-
-import localcluster_probe as lc  # noqa: E402  (harness reuse)
+#: 3 workers so one kill leaves 2 live executors and the relaunch is
+#: observable; worker memory sized for the 2× shapes
+MASTER = "local-cluster[3,4,2560]"
+WORKERS = lc.cluster_shape(MASTER)[0]
 
 
 def executor_pids() -> set[int]:
@@ -111,37 +107,28 @@ class Killer:
 
 
 def collect_phase(mode: str, out_path: str, walls: dict[str, float]) -> None:
-    from pyspark.sql import functions as F
-
-    from hive_plan_service_spark.operators import vectors as vx
-    from hive_plan_service_spark.operators.kmeans import kmeans_integer_np
-    from hive_plan_service_spark.plans.llm_ops import dedup_clusters_production
     from hive_plan_service_spark.sources.catalog import register_tables
 
-    spark = lc.build_session("localcluster")
+    spark = lc.build_session("localcluster", MASTER)
     killer = Killer(spark)
     killer.observe()
     result: dict = {"mode": mode, "master": spark.sparkContext.master}
-
-    root = lc._scratch()
-    docs_path = os.path.join(root, f"docs_{lc.DOCS_MULT}x")
-    emb_path = os.path.join(root, f"emb_{lc.EMB_MULT}x")
     if mode == "clean":
-        lc.build_fixtures(spark)
+        docs_path, emb_path = lc.build_fixtures(spark)
     else:
         register_tables(spark, lc.SF_DIR)
+        docs_path, emb_path = lc.fixture_paths()
 
     shapes: dict = {}
     job_retries: list[dict] = []
-
-    def run_shape(label: str, fn) -> None:
-        """Run one shape; in chaos mode arm a kill and allow ONE
-        job-level retry. localCheckpoint blocks (invariant 24) are
-        deliberately unrecoverable under executor loss — Spark fails
-        the job LOUDLY ("Checkpoint block not found"), never silently
-        corrupts — and a 100 TB orchestrator answers that with a job
-        retry. The certification is: transparent recovery OR loud
-        failure + bit-identical retry."""
+    # In chaos mode each shape gets a kill and ONE job-level retry.
+    # localCheckpoint blocks (invariant 24) are deliberately
+    # unrecoverable under executor loss — Spark fails the job LOUDLY
+    # ("Checkpoint block not found"), never silently corrupts — and a
+    # 100 TB orchestrator answers that with a job retry. The
+    # certification is: transparent recovery OR loud failure +
+    # bit-identical retry.
+    for label, fn in lc.shape_runs(spark, docs_path, emb_path):
         t0 = time.time()
         if mode == "chaos":
             # 40% into the clean wall — mid-flight, past the scan stages
@@ -159,60 +146,6 @@ def collect_phase(mode: str, out_path: str, walls: dict[str, float]) -> None:
         shapes.update(out)
         killer.observe()
 
-    def dedup_shape() -> dict:
-        spark.read.parquet(docs_path).createOrReplaceTempView("documents")
-        try:
-            return {"dedup_clusters_capped": lc.fingerprint(
-                dedup_clusters_production(spark, lc.SF_DIR)
-            )}
-        finally:
-            register_tables(spark, lc.SF_DIR, force=True)
-
-    def pq_shape() -> dict:
-        corpus = spark.read.parquet(emb_path)
-        books = vx.pq_train_codebooks_np(
-            corpus, subspaces=4, codes=16, dim=64, max_iter=3
-        ).localCheckpoint(eager=True)
-        return {
-            "pq_codebooks_np": lc.fingerprint(books),
-            "pq_encode_np": lc.fingerprint(
-                vx.pq_encode_np(corpus, books, subspaces=4, dim=64)
-            ),
-        }
-
-    def ivf_shape() -> dict:
-        corpus = spark.read.parquet(emb_path)
-        cents = (
-            kmeans_integer_np(
-                corpus, k=16, dim=64, iters=3, vec="embedding",
-                id_col="vec_id",
-            )
-            .select(
-                F.col("code").cast("bigint").alias("centroid_id"),
-                F.col("centroid").cast("array<float>").alias("embedding"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        return {
-            "kmeans_centroids_np": lc.fingerprint(cents),
-            "ivf_assign_np": lc.fingerprint(vx.ivf_assign_np(corpus, cents)),
-        }
-
-    run_shape("dedup_clusters_capped", dedup_shape)
-    run_shape("pq_encode_np", pq_shape)
-    run_shape("ivf_assign_np", ivf_shape)
-
-    from hive_plan_service_spark.plans.registry import all_queries
-
-    qs = all_queries()
-    for qname, key in (
-        ("b27_stream_dedup_ingest", "stream_dedup_ingest"),
-        ("b24_stateful_counter_applyinpandas", "stateful_counter"),
-    ):
-        run_shape(key, lambda q=qname, k=key: {
-            k: lc.fingerprint(qs[q].fn(spark, lc.SF_DIR))
-        })
-
     result["shapes"] = shapes
     result["kills"] = killer.log
     result["job_retries"] = job_retries
@@ -229,12 +162,8 @@ def canonical_chaos(kill_every_s: float) -> None:
     seconds for the whole sweep. The oracle IS the clean reference
     here (DuckDB runs outside Spark), so no clean Spark phase is
     needed; loud failures get one job-level retry (the orchestrator
-    contract for unrecoverable checkpoint blocks, see run_shape)."""
-    from parity import check_query
-
-    from hive_plan_service_spark.plans.registry import CANONICAL, all_queries
-
-    spark = lc.build_session("localcluster")
+    contract for unrecoverable checkpoint blocks, see collect_phase)."""
+    spark = lc.build_session("localcluster", MASTER)
     stop = threading.Event()
     kills: list[dict] = []
     seen: set[int] = set(executor_pids())
@@ -256,41 +185,29 @@ def canonical_chaos(kill_every_s: float) -> None:
 
     threading.Thread(target=assassin, daemon=True).start()
 
-    qs = all_queries()
-    fails: list[dict] = []
-    retries: list[dict] = []
-    t_all = time.time()
-    for name in CANONICAL:
-        try:
-            check_query(spark, qs[name], lc.CANON_SF_DIR)
-        except Exception as e:  # noqa: BLE001 — loud failure: one retry
-            retries.append({"slot": name, "err": str(e)[:200]})
-            print(f"    {name}: loud failure — job-level retry", flush=True)
-            try:
-                check_query(spark, qs[name], lc.CANON_SF_DIR)
-            except Exception as e2:  # noqa: BLE001
-                fails.append({"slot": name, "err": str(e2)[:300]})
-                print(f"{name}: FAIL {str(e2)[:200]}", flush=True)
+    sweep = probekit.canonical_sweep(spark, lc.CANON_SF_DIR, retries=1)
     stop.set()
     seen.update(executor_pids())
+    spark.stop()
+    slots = sweep["slots"]
     mid_job = [k for k in kills if k["active_jobs"]]
-    summary = {
+    fails = [{"slot": n, "err": s["errors"][-1]}
+             for n, s in slots.items() if not s["ok"]]
+    probekit.finish({
         "ok": not fails and len(mid_job) >= 2,
-        "slots_ok": len(CANONICAL) - len(fails),
-        "slots_total": len(CANONICAL),
+        "slots_ok": sweep["ok"],
+        "slots_total": sweep["total"],
         "failures": fails,
-        "job_retries": retries,
+        "job_retries": [{"slot": n, "err": s["errors"][0]}
+                        for n, s in slots.items() if s["errors"]],
         "kills": len(kills),
         "kills_mid_job": len(mid_job),
         "kill_every_s": kill_every_s,
         "distinct_executor_pids": len(seen),
-        "workers": lc._WORKERS,
-        "relaunch_observed": len(seen) > lc._WORKERS,
-        "wall_s": round(time.time() - t_all, 1),
-    }
-    print(json.dumps(summary), flush=True)
-    spark.stop()
-    sys.exit(0 if summary["ok"] else 1)
+        "workers": WORKERS,
+        "relaunch_observed": len(seen) > WORKERS,
+        "wall_s": sweep["wall_s"],
+    })
 
 
 def main() -> None:
@@ -311,46 +228,19 @@ def main() -> None:
         return
 
     root = lc._scratch()
-    paths = {m: os.path.join(root, f"execloss_{m}.json")
-             for m in ("clean", "chaos")}
     try:
-        walls: dict[str, float] = {}
-        for mode, out in paths.items():  # clean first: builds fixtures
-            t0 = time.time()
-            print(f"=== phase {mode}", flush=True)
-            rc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__),
-                 "--collect", mode, "--out", out,
-                 "--walls", json.dumps(walls)],
-                cwd=REPO_ROOT,
-            ).returncode
-            print(f"    phase {mode}: rc={rc} in {time.time() - t0:.0f}s",
-                  flush=True)
-            if rc != 0:
-                print(json.dumps({"ok": False, "failed_phase": mode}))
-                sys.exit(1)
-            if mode == "clean":
-                with open(out) as f:
-                    walls = {
-                        k: v["wall_s"]
-                        for k, v in json.load(f)["shapes"].items()
-                        if "wall_s" in v
-                    }
-
-        with open(paths["clean"]) as f:
-            clean = json.load(f)
-        with open(paths["chaos"]) as f:
-            chaos = json.load(f)
-
-        mismatches = []
-        for name, fp in clean["shapes"].items():
-            got = chaos["shapes"].get(name, {})
-            if any(fp.get(k) != got.get(k) for k in ("n", "m1", "m2")):
-                mismatches.append({"shape": name, "clean": fp, "chaos": got})
+        # clean first: builds the fixtures and sets the kill delays
+        clean = probekit.run_phase(
+            __file__, "clean", os.path.join(root, "execloss_clean.json"))
+        chaos = probekit.run_phase(
+            __file__, "chaos", os.path.join(root, "execloss_chaos.json"),
+            "--walls", json.dumps(probekit.shape_walls(clean["shapes"])))
+        mismatches = probekit.shape_mismatches(
+            clean["shapes"], chaos["shapes"], "clean", "chaos")
         kills = chaos.get("kills", [])
         landed = [k for k in kills
                   if k.get("confirmed_dead") and k.get("active_jobs")]
-        summary = {
+        probekit.finish({
             "ok": not mismatches and len(landed) >= 1,
             "shape_fingerprints_match": not mismatches,
             "mismatches": mismatches,
@@ -359,18 +249,11 @@ def main() -> None:
             "kills": kills,
             "job_retries": chaos.get("job_retries", []),
             "distinct_executor_pids_chaos": chaos["distinct_executor_pids"],
-            "workers": lc._WORKERS,
-            "relaunch_observed":
-                chaos["distinct_executor_pids"] > lc._WORKERS,
-            "shapes_clean_wall_s":
-                {k: v.get("wall_s") for k, v in clean["shapes"].items()
-                 if "wall_s" in v},
-            "shapes_chaos_wall_s":
-                {k: v.get("wall_s") for k, v in chaos["shapes"].items()
-                 if "wall_s" in v},
-        }
-        print(json.dumps(summary), flush=True)
-        sys.exit(0 if summary["ok"] else 1)
+            "workers": WORKERS,
+            "relaunch_observed": chaos["distinct_executor_pids"] > WORKERS,
+            "shapes_clean_wall_s": probekit.shape_walls(clean["shapes"]),
+            "shapes_chaos_wall_s": probekit.shape_walls(chaos["shapes"]),
+        })
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

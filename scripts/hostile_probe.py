@@ -422,26 +422,21 @@ def hostile_dir(
     return out
 
 
+def _seed_after(argv: list[str], flag: str, default: int) -> int | None:
+    """The seed of a ``flag [SEED]`` mode: the integer after ``flag``,
+    else ``default``; None when the flag is absent."""
+    if flag not in argv:
+        return None
+    nxt = argv[argv.index(flag) + 1:][:1]
+    return int(nxt[0]) if nxt and nxt[0].lstrip("-").isdigit() else default
+
+
 def main() -> None:
     argv = sys.argv[1:]
     nulls = "--nulls" in argv
     empty = "--empty" in argv
-    seed = None
-    if "--fuzz" in argv:
-        i = argv.index("--fuzz")
-        nxt = argv[i + 1] if len(argv) > i + 1 else ""
-        seed = (
-            int(nxt) if nxt.lstrip("-").isdigit()
-            else int(os.environ.get("SPARK_GRAFT_FUZZ_SEED", "20260815"))
-        )
-    numfuzz_seed = None
-    if "--numfuzz" in argv:
-        i = argv.index("--numfuzz")
-        nxt = argv[i + 1] if len(argv) > i + 1 else ""
-        numfuzz_seed = (
-            int(nxt) if nxt.lstrip("-").isdigit()
-            else int(os.environ.get("SPARK_GRAFT_FUZZ_SEED", "20260816"))
-        )
+    seed = _seed_after(argv, "--fuzz", 20260815)
+    numfuzz_seed = _seed_after(argv, "--numfuzz", 20260816)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     pool = None
     if numfuzz_seed is not None:

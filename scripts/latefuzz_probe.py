@@ -632,9 +632,7 @@ def run_phase_a3(
 
 
 def main() -> int:
-    seed = int(sys.argv[1]) if len(sys.argv) > 1 else int(
-        os.environ.get("SPARK_GRAFT_FUZZ_SEED", "20260817")
-    )
+    seed = int(sys.argv[1]) if len(sys.argv) > 1 else 20260817
     rng = random.Random(seed)
     work = tempfile.mkdtemp(prefix="latefuzz_", dir=scratch_root())
     os.environ["SPARK_GRAFT_STREAM_MAX_FILES"] = "1"

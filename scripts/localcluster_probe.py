@@ -32,6 +32,10 @@ Layout quirks handled here (both verified empirically):
   writers.safe_parquet_block_bytes) size per-task buffers from it, so
   the probe sets it explicitly — exactly what a real deployment does.
 
+The session, sweep, fingerprint, replication and phase plumbing are
+``probekit``'s; execloss (scripts/executor_loss_probe.py) reuses this
+module's session, fixtures and shapes on its own topology.
+
 Usage: python scripts/localcluster_probe.py            (orchestrates)
        ... --collect {local,localcluster} --out F.json (one phase)
 Exit 0 iff 50/50 canonical OK under local-cluster AND every shape
@@ -41,30 +45,27 @@ from __future__ import annotations
 
 import argparse
 import json
-import re
 import os
+import re
 import shutil
-import subprocess
 import sys
 import time
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO_ROOT)
-sys.path.insert(0, os.path.join(REPO_ROOT, "tests"))
+import probekit
+from probekit import REPO_ROOT, fingerprint
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CANON_SF_DIR = os.environ.get("SPARK_GRAFT_CANON_SF_DIR", "/root/testdata/sf0.01")
-DOCS_MULT = int(os.environ.get("SPARK_GRAFT_LC_DOCS_MULT", "2"))
-EMB_MULT = int(os.environ.get("SPARK_GRAFT_LC_EMB_MULT", "10"))
-# topology is env-overridable (r7: a second 4×4 layout run certifies
-# broadcast fan-out / per-executor ratchets beyond the default 2×8)
-LC_MASTER = os.environ.get("SPARK_GRAFT_LC_MASTER", "local-cluster[2,8,4096]")
-_m = re.fullmatch(r"local-cluster\[(\d+),(\d+),(\d+)\]", LC_MASTER)
-assert _m, f"SPARK_GRAFT_LC_MASTER must be local-cluster[w,c,mb]: {LC_MASTER}"
-_WORKERS, _EXEC_CORES, _WORKER_MB = (int(g) for g in _m.groups())
-TOTAL_CORES = _WORKERS * _EXEC_CORES  # the plain-local twin matches it
-#: executor heap: worker memory minus 1 GiB daemon headroom, ≥1 GiB
-_EXEC_MEM_MB = max(1024, _WORKER_MB - 1024)
+CANON_SF_DIR = "/root/testdata/sf0.01"
+DOCS_MULT = 2
+EMB_MULT = 10
+LC_MASTER = "local-cluster[2,8,4096]"
+
+
+def cluster_shape(master: str) -> tuple[int, int, int]:
+    """(workers, cores per worker, MiB per worker) of a local-cluster master."""
+    m = re.fullmatch(r"local-cluster\[(\d+),(\d+),(\d+)\]", master)
+    assert m, f"master must be local-cluster[w,c,mb]: {master}"
+    return tuple(int(g) for g in m.groups())
 
 
 def _scratch() -> str:
@@ -87,212 +88,119 @@ def _scratch() -> str:
     return d
 
 
-def build_session(mode: str):
-    from pyspark.sql import SparkSession
-
-    from hive_plan_service_spark.session import tune
-
+def build_session(mode: str, master: str = LC_MASTER):
+    """``local[workers × cores]`` for the plain-local twin, else the
+    pseudo-cluster ``master`` with its executors registered."""
+    workers, cores, worker_mb = cluster_shape(master)
+    total = workers * cores
     os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
-    master = LC_MASTER if mode == "localcluster" else f"local[{TOTAL_CORES}]"
-    b = (
-        SparkSession.builder.master(master)
-        .appName(f"hpss-lc-probe-{mode}")
-        .config("spark.ui.enabled", "false")
+    conf = {"spark.app.name": f"hpss-lc-probe-{mode}",
+            "spark.ui.enabled": "false"}
+    if mode != "localcluster":
+        return probekit.plain_session(f"local[{total}]", conf)
+    spark = probekit.plain_session(master, {
+        **conf,
+        # worker memory minus 1 GiB daemon headroom, ≥1 GiB
+        "spark.executor.memory": f"{max(1024, worker_mb - 1024)}m",
+        # standalone executors take all worker cores; the heap ratchets
+        # size per-task buffers from this conf
+        "spark.executor.cores": str(cores),
+        # remote python workers must import the engine package
+        "spark.executorEnv.PYTHONPATH": REPO_ROOT,
+    })
+    # barrier: wait for every executor to register so nothing reads a
+    # 2-core defaultParallelism (observed before registration)
+    sc = spark.sparkContext
+    deadline = time.time() + 60
+    while time.time() < deadline:
+        sc.parallelize(range(32), 32).count()
+        if sc.defaultParallelism >= total:
+            break
+        time.sleep(1)
+    assert sc.defaultParallelism >= total, (
+        f"executors never registered: defaultParallelism="
+        f"{sc.defaultParallelism}"
     )
-    if mode == "localcluster":
-        b = (
-            b.config("spark.executor.memory", f"{_EXEC_MEM_MB}m")
-            # standalone executors take all 8 worker cores; the heap
-            # ratchets size per-task buffers from this conf
-            .config("spark.executor.cores", str(_EXEC_CORES))
-            # remote python workers must import the engine package
-            .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
-        )
-    spark = tune(b.getOrCreate())
-    if mode == "localcluster":
-        # barrier: wait for both executors to register so nothing reads
-        # a 2-core defaultParallelism (observed before registration)
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            spark.sparkContext.parallelize(range(32), 32).count()
-            if spark.sparkContext.defaultParallelism >= TOTAL_CORES:
-                break
-            time.sleep(1)
-        assert spark.sparkContext.defaultParallelism >= TOTAL_CORES, (
-            f"executors never registered: defaultParallelism="
-            f"{spark.sparkContext.defaultParallelism}"
-        )
     return spark
 
 
-def fingerprint(df) -> dict:
-    """Order-insensitive content fingerprint: count + two modular
-    moments of per-row xxhash64 over all columns (sorted by name).
-    Sums are pre-reduced mod 2^31 so ANSI-mode BIGINT SUM can't
-    overflow at any row count this probe reaches."""
-    from pyspark.sql import functions as F
-
-    cols = [F.col(c) for c in sorted(df.columns)]
-    h = df.select(F.xxhash64(*cols).alias("h"))
-    row = h.agg(
-        F.count("*").alias("n"),
-        F.sum(F.pmod(F.col("h"), F.lit(1 << 31))).alias("m1"),
-        F.sum(F.pmod(F.col("h"), F.lit(1_000_003))).alias("m2"),
-    ).collect()[0]
-    return {"n": row["n"], "m1": str(row["m1"]), "m2": str(row["m2"])}
+def fixture_paths() -> tuple[str, str]:
+    root = _scratch()
+    return (os.path.join(root, f"docs_{DOCS_MULT}x"),
+            os.path.join(root, f"emb_{EMB_MULT}x"))
 
 
 def build_fixtures(spark) -> tuple[str, str]:
     """Multiplied distinct-content corpora (invariant 23), materialized
-    once by the plain-local phase and read by both phases."""
-    from pyspark.sql import functions as F
-
+    once by the first phase and read by both phases."""
     from hive_plan_service_spark.sources.catalog import register_tables
     from hive_plan_service_spark.sources.writers import write_parquet_heap_safe
 
     register_tables(spark, SF_DIR)
-    root = _scratch()
-    docs_path = os.path.join(root, f"docs_{DOCS_MULT}x")
-    emb_path = os.path.join(root, f"emb_{EMB_MULT}x")
-
-    base = spark.table("documents")
-    n = base.count()
-    reps = spark.range(DOCS_MULT).select(F.col("id").alias("_rep"))
-    docs = (
-        base.crossJoin(reps)
-        .withColumn("doc_id", F.col("doc_id") + F.col("_rep") * F.lit(n))
-        .withColumn(
-            "text",
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.split(F.col("text"), " "),
-                    lambda w: F.concat(
-                        w, F.lit("_"), F.col("_rep").cast("string")
-                    ),
-                ),
-            ),
-        )
-        .drop("_rep")
-    )
-    docs.repartition(TOTAL_CORES).write.mode("overwrite").parquet(docs_path)
-
-    ebase = spark.table("embeddings")
-    en = ebase.count()
-    ereps = spark.range(EMB_MULT).select(F.col("id").alias("_rep"))
-    emb = (
-        ebase.crossJoin(ereps)
-        .withColumn("vec_id", F.col("vec_id") + F.col("_rep") * F.lit(en))
-        .withColumn(
-            "embedding",
-            F.transform(
-                "embedding",
-                lambda x, i: (
-                    x.cast("double")
-                    + F.pmod(F.xxhash64(F.col("vec_id"), i), F.lit(1000))
-                    .cast("double") / F.lit(10000.0)
-                    - F.lit(0.05)
-                ).cast("float"),
-            ),
-        )
-        .drop("_rep")
-    )
-    write_parquet_heap_safe(emb.repartition(TOTAL_CORES), emb_path)
+    docs_path, emb_path = fixture_paths()
+    parts = spark.sparkContext.defaultParallelism
+    probekit.mult_docs(spark, DOCS_MULT).repartition(parts).write.mode(
+        "overwrite").parquet(docs_path)
+    write_parquet_heap_safe(
+        probekit.mult_embeddings(spark, EMB_MULT).repartition(parts), emb_path)
     return docs_path, emb_path
 
 
-def collect_phase(mode: str, out_path: str) -> None:
-    from pyspark.sql import functions as F
-
-    from hive_plan_service_spark.operators import vectors as vx
-    from hive_plan_service_spark.operators.kmeans import kmeans_integer_np
+def shape_runs(spark, docs_path: str, emb_path: str) -> list:
+    """The production shapes, as (label, fn) pairs: each fn returns
+    ``{shape: fingerprint}`` and ``label`` is the entry that carries
+    the fn's wall time."""
     from hive_plan_service_spark.plans.llm_ops import dedup_clusters_production
-    from hive_plan_service_spark.plans.registry import CANONICAL, all_queries
+    from hive_plan_service_spark.plans.registry import all_queries
+    from hive_plan_service_spark.sources.catalog import register_tables
+
+    def dedup() -> dict:
+        spark.read.parquet(docs_path).createOrReplaceTempView("documents")
+        try:
+            return {"dedup_clusters_capped": fingerprint(
+                dedup_clusters_production(spark, SF_DIR))}
+        finally:
+            register_tables(spark, SF_DIR, force=True)
+
+    qs = all_queries()
+
+    def query(name: str, key: str):
+        return lambda: {key: fingerprint(qs[name].fn(spark, SF_DIR))}
+
+    return [
+        ("dedup_clusters_capped", dedup),
+        ("pq_encode_np", lambda: probekit.pq_shapes(
+            spark.read.parquet(emb_path), codes=16, max_iter=3)),
+        ("ivf_assign_np", lambda: probekit.ivf_shapes(
+            spark.read.parquet(emb_path), k=16, iters=3)),
+        ("stream_dedup_ingest",
+         query("b27_stream_dedup_ingest", "stream_dedup_ingest")),
+        ("stateful_counter",
+         query("b24_stateful_counter_applyinpandas", "stateful_counter")),
+    ]
+
+
+def collect_phase(mode: str, out_path: str) -> None:
     from hive_plan_service_spark.sources.catalog import register_tables
 
     spark = build_session(mode)
     result: dict = {"mode": mode, "master": spark.sparkContext.master}
-
-    root = _scratch()
-    docs_path = os.path.join(root, f"docs_{DOCS_MULT}x")
-    emb_path = os.path.join(root, f"emb_{EMB_MULT}x")
     if mode == "local":
-        build_fixtures(spark)
+        docs_path, emb_path = build_fixtures(spark)
     else:
         register_tables(spark, SF_DIR)
+        docs_path, emb_path = fixture_paths()
 
-    qs = all_queries()
     shapes: dict = {}
-
-    t0 = time.time()
-    spark.read.parquet(docs_path).createOrReplaceTempView("documents")
-    try:
-        shapes["dedup_clusters_capped"] = fingerprint(
-            dedup_clusters_production(spark, SF_DIR)
-        )
-    finally:
-        register_tables(spark, SF_DIR, force=True)
-    shapes["dedup_clusters_capped"]["wall_s"] = round(time.time() - t0, 1)
-
-    corpus = spark.read.parquet(emb_path)
-    t0 = time.time()
-    books = vx.pq_train_codebooks_np(
-        corpus, subspaces=4, codes=16, dim=64, max_iter=3
-    ).localCheckpoint(eager=True)
-    shapes["pq_codebooks_np"] = fingerprint(books)
-    shapes["pq_encode_np"] = fingerprint(
-        vx.pq_encode_np(corpus, books, subspaces=4, dim=64)
-    )
-    shapes["pq_encode_np"]["wall_s"] = round(time.time() - t0, 1)
-
-    t0 = time.time()
-    cents = (
-        kmeans_integer_np(
-            corpus, k=16, dim=64, iters=3, vec="embedding", id_col="vec_id"
-        )
-        .select(
-            F.col("code").cast("bigint").alias("centroid_id"),
-            F.col("centroid").cast("array<float>").alias("embedding"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    shapes["kmeans_centroids_np"] = fingerprint(cents)
-    shapes["ivf_assign_np"] = fingerprint(vx.ivf_assign_np(corpus, cents))
-    shapes["ivf_assign_np"]["wall_s"] = round(time.time() - t0, 1)
-
-    for qname, key in (
-        ("b27_stream_dedup_ingest", "stream_dedup_ingest"),
-        ("b24_stateful_counter_applyinpandas", "stateful_counter"),
-    ):
+    for label, fn in shape_runs(spark, docs_path, emb_path):
         t0 = time.time()
-        shapes[key] = fingerprint(qs[qname].fn(spark, SF_DIR))
-        shapes[key]["wall_s"] = round(time.time() - t0, 1)
-
+        out = fn()
+        out[label]["wall_s"] = round(time.time() - t0, 1)
+        shapes.update(out)
     result["shapes"] = shapes
-
     if mode == "localcluster":
         # the driver's t2 gate, across JVM boundaries
-        from parity import check_query
-
-        canon: dict = {}
-        fail = 0
-        t_all = time.time()
-        for name in CANONICAL:
-            t0 = time.time()
-            try:
-                check_query(spark, qs[name], CANON_SF_DIR)
-                canon[name] = {"ok": True, "wall_s": round(time.time() - t0, 1)}
-            except Exception as e:  # noqa: BLE001 — report every slot
-                fail += 1
-                canon[name] = {"ok": False, "err": str(e)[:300]}
-                print(f"{name}: FAIL {str(e)[:300]}", flush=True)
-        result["canonical"] = {
-            "ok": len(CANONICAL) - fail,
-            "total": len(CANONICAL),
-            "wall_s": round(time.time() - t_all, 1),
-            "slots": canon,
-        }
-
+        result["canonical"] = probekit.canonical_sweep(spark, CANON_SF_DIR)
     spark.stop()
     with open(out_path, "w") as f:
         json.dump(result, f)
@@ -308,57 +216,27 @@ def main() -> None:
         return
 
     root = _scratch()
-    paths = {
-        m: os.path.join(root, f"phase_{m}.json")
-        for m in ("local", "localcluster")
-    }
     try:
-        for mode, out in paths.items():  # local first: builds the fixtures
-            t0 = time.time()
-            print(f"=== phase {mode}", flush=True)
-            rc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__),
-                 "--collect", mode, "--out", out],
-                cwd=REPO_ROOT,
-                env={**os.environ, "LC_PROBE_SCRATCH": root},
-            ).returncode
-            print(f"    phase {mode}: rc={rc} in {time.time() - t0:.0f}s",
-                  flush=True)
-            if rc != 0:
-                print(json.dumps({"ok": False, "failed_phase": mode}))
-                sys.exit(1)
-
-        with open(paths["local"]) as f:
-            local = json.load(f)
-        with open(paths["localcluster"]) as f:
-            lc = json.load(f)
-
-        mismatches = []
-        for name, fp in local["shapes"].items():
-            got = lc["shapes"].get(name, {})
-            if any(fp.get(k) != got.get(k) for k in ("n", "m1", "m2")):
-                mismatches.append({"shape": name, "local": fp, "localcluster": got})
+        # local first: builds the fixtures
+        local, lc = [
+            probekit.run_phase(__file__, m, os.path.join(root, f"phase_{m}.json"))
+            for m in ("local", "localcluster")
+        ]
+        mismatches = probekit.shape_mismatches(
+            local["shapes"], lc["shapes"], "local", "localcluster")
         canon = lc["canonical"]
-        summary = {
+        probekit.finish({
             "ok": not mismatches and canon["ok"] == canon["total"],
             "canonical_ok": canon["ok"],
             "canonical_total": canon["total"],
             "canonical_wall_s": canon["wall_s"],
             "shape_fingerprints_match": not mismatches,
             "mismatches": mismatches,
-            "shapes_local_wall_s": {
-                k: v.get("wall_s") for k, v in local["shapes"].items()
-                if "wall_s" in v
-            },
-            "shapes_lc_wall_s": {
-                k: v.get("wall_s") for k, v in lc["shapes"].items()
-                if "wall_s" in v
-            },
+            "shapes_local_wall_s": probekit.shape_walls(local["shapes"]),
+            "shapes_lc_wall_s": probekit.shape_walls(lc["shapes"]),
             "docs_mult": DOCS_MULT,
             "emb_mult": EMB_MULT,
-        }
-        print(json.dumps(summary), flush=True)
-        sys.exit(0 if summary["ok"] else 1)
+        })
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

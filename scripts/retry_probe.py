@@ -23,8 +23,7 @@ counter_events) are re-derived OVER the chaos bases so reference-shape
 queries get injected too.
 
 Sweep: every CANONICAL slot — clean fingerprint vs chaos fingerprint
-(order-insensitive xxhash64 moments, same scheme as
-localcluster_probe) — plus the np index-build twins (pq codebooks /
+(``probekit.fingerprint``) — plus the np index-build twins (pq codebooks /
 encode, kmeans centroids, ivf assign), whose closure-shipped artifacts
 and per-partition numpy accumulation are the named risk spots.
 Streaming slots read files directly (not views), so for them the sweep
@@ -45,9 +44,12 @@ import os
 import sys
 import time
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO_ROOT)
+import probekit
+from probekit import fingerprint
 
+#: local[16,4]: 16 cores, FOUR task attempts — the whole point (plain
+#: ``local[N]`` never retries)
+MASTER = "local[16,4]"
 CHAOS_EVERY = 3  # attempt 0 of every 3rd partition raises
 
 #: streaming slots read fixture files via readStream, not the chaos
@@ -60,19 +62,6 @@ QUICK_SLOTS = (
     "b27_dedup_minhash_lsh",  # sketch: explode + partial-agg + LSH join
     "b29_text_quality",
 )
-
-
-def fingerprint(df) -> dict:
-    from pyspark.sql import functions as F
-
-    cols = [F.col(c) for c in sorted(df.columns)]
-    h = df.select(F.xxhash64(*cols).alias("h"))
-    row = h.agg(
-        F.count("*").alias("n"),
-        F.sum(F.pmod(F.col("h"), F.lit(1 << 31))).alias("m1"),
-        F.sum(F.pmod(F.col("h"), F.lit(1_000_003))).alias("m2"),
-    ).collect()[0]
-    return {"n": row["n"], "m1": str(row["m1"]), "m2": str(row["m2"])}
 
 
 def chaos_wrap(df, acc):
@@ -129,45 +118,13 @@ def main() -> None:
     if args.quick:
         args.sf_dir = "/root/testdata/sf0.001"
 
-    from pyspark.sql import SparkSession
-
-    from hive_plan_service_spark.operators import vectors as vx
-    from hive_plan_service_spark.operators.kmeans import kmeans_integer_np
     from hive_plan_service_spark.plans.registry import CANONICAL, all_queries
-    from hive_plan_service_spark.session import tune
     from hive_plan_service_spark.sources.catalog import register_tables
 
     os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
-    # local[16,4]: 16 cores, FOUR task attempts — the whole point.
-    # SPARK_GRAFT_RETRY_MASTER=local-cluster[w,c,mb] combines the two
-    # certification axes (r7): injected failures re-scheduled across
-    # SEPARATE executor JVMs (cluster default spark.task.maxFailures=4),
-    # the closest sandbox proxy to production failure handling.
-    master = os.environ.get("SPARK_GRAFT_RETRY_MASTER", "local[16,4]")
-    b = (
-        SparkSession.builder.master(master)
-        .appName("hpss-retry-probe")
-        .config("spark.ui.enabled", "false")
-    )
-    if master.startswith("local-cluster"):
-        import re as _re
-
-        w, c, mb = map(int, _re.fullmatch(
-            r"local-cluster\[(\d+),(\d+),(\d+)\]", master).groups())
-        b = (
-            b.config("spark.executor.memory", f"{max(1024, mb - 1024)}m")
-            .config("spark.executor.cores", str(c))
-            .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
-        )
-    spark = tune(b.getOrCreate())
-    if master.startswith("local-cluster"):
-        # executor-registration barrier (localcluster_probe's rule)
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            spark.sparkContext.parallelize(range(32), 32).count()
-            if spark.sparkContext.defaultParallelism >= w * c:
-                break
-            time.sleep(1)
+    spark = probekit.plain_session(
+        MASTER, {"spark.app.name": "hpss-retry-probe",
+                 "spark.ui.enabled": "false"})
     acc = spark.sparkContext.accumulator(0)
 
     qs = all_queries()
@@ -177,30 +134,8 @@ def main() -> None:
     emb = spark.read.parquet(f"{args.sf_dir}/embeddings.parquet")
 
     def np_twin_shapes(corpus):
-        out = {}
-        books = vx.pq_train_codebooks_np(
-            corpus, subspaces=4, codes=8, dim=64, max_iter=2
-        ).localCheckpoint(eager=True)
-        out["pq_codebooks_np"] = fingerprint(books)
-        out["pq_encode_np"] = fingerprint(
-            vx.pq_encode_np(corpus, books, subspaces=4, dim=64)
-        )
-        from pyspark.sql import functions as F
-
-        cents = (
-            kmeans_integer_np(
-                corpus, k=4, dim=64, iters=2, vec="embedding",
-                id_col="vec_id",
-            )
-            .select(
-                F.col("code").cast("bigint").alias("centroid_id"),
-                F.col("centroid").cast("array<float>").alias("embedding"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        out["kmeans_centroids_np"] = fingerprint(cents)
-        out["ivf_assign_np"] = fingerprint(vx.ivf_assign_np(corpus, cents))
-        return out
+        return {**probekit.pq_shapes(corpus, codes=8, max_iter=2),
+                **probekit.ivf_shapes(corpus, k=4, iters=2)}
 
     # ---- clean pass -------------------------------------------------
     clean: dict = {}

@@ -41,15 +41,11 @@ import time
 import numpy as np
 import pyarrow.parquet as pq
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO_ROOT)
-sys.path.insert(0, os.path.join(REPO_ROOT, "tests"))
+import probekit
+from probekit import REPO_ROOT
 
-from pyspark.sql import SparkSession
-
-from hive_plan_service_spark.session import tune
 from hive_plan_service_spark.plans.registry import CANONICAL, all_queries
-from parity import TABLES, canonical_rows
+from tests.parity import TABLES, canonical_rows
 
 SEED = 20260816
 
@@ -82,8 +78,7 @@ def main() -> int:
 def _run(sf_dir: str, scratch: str) -> int:
     perm_dir = build_permuted(sf_dir, scratch)
 
-    spark = SparkSession.builder.master("local[32]").getOrCreate()
-    tune(spark)
+    spark = probekit.plain_session("local[32]")
     qs = all_queries()
 
     fail = 0

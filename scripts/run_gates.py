@@ -10,87 +10,9 @@ JSON line (plus an optional file via --out).
 Usage:
     python scripts/run_gates.py [--out GATES.json] [--skip bench,...]
 
-Gates (names usable with --skip / --only, comma-separated):
-    pytest   python -m pytest tests/ -q                       (sf0.001)
-    driver   python scripts/driver_sim.py                     (sf0.01)
-    bench    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py
-    extbench python scripts/bench_extended.py  (production shapes, sf0.1)
-    hostile  python scripts/hostile_probe.py                  (content)
-    nulls    python scripts/hostile_probe.py --nulls
-    empty    python scripts/hostile_probe.py --empty
-    restart  python scripts/restart_probe.py  (crash/replay + state reload)
-    smallfiles python scripts/small_files_probe.py (2000-file layouts)
-    concurrency python scripts/concurrency_probe.py (50 queries, 8 threads)
-    localcluster python scripts/localcluster_probe.py (separate executor
-             JVMs: 50 canonical + row-identical production shapes, r7)
-    retry    python scripts/retry_probe.py (injected task failures ×4
-             attempts: all 50 canonical + np twins bit-identical, r7)
-    fuzz     python scripts/hostile_probe.py --fuzz (seed-pinned random
-             hostile content over all oracled queries, r7)
-    aqeoff   driver_sim with spark.sql.adaptive.enabled=false — all 50
-             canonical oracles invariant to AQE re-planning (r7)
-    nobroadcast driver_sim with autoBroadcastJoinThreshold=-1 — all 50
-             canonical oracles invariant to join-strategy choice (r7)
-    tz       driver_sim under TZ=America/New_York — all 50 canonical
-             oracles invariant to the host timezone (r7)
-    sf01     driver_sim at sf0.1 — the full oracle sweep at 10× the
-             driver's gate scale (r7)
-    codegenoff driver_sim with whole-stage codegen off + interpreted
-             expressions — invariance to codegen fallback (r7)
-    arrowbatch driver_sim with arrow.maxRecordsPerBatch=7 — Pandas-UDF
-             kernels invariant to Arrow batch boundaries (r7)
-    kryo     driver_sim under spark.serializer=KryoSerializer (r7)
-    offheap  driver_sim with Tungsten off-heap execution memory (r7)
-    novectorized driver_sim with the vectorized parquet reader off —
-             the per-file fallback decode path must match (r7)
-    locale   driver_sim under a Turkish JVM locale + LC_ALL=C — no
-             default-locale case mapping anywhere in the path (r7)
-    localehostile hostile-content sweep (122 oracled queries) under the
-             Turkish JVM — non-ASCII strings through upper/lower's
-             locale-sensitive fallback (r7)
-    splitvar driver_sim with 1 MiB scan splits — results invariant to
-             parquet split boundaries and scan parallelism (r7)
-    execloss SIGKILL executor JVMs mid-query (local-cluster) — lost
-             shuffle blocks, stage resubmission, master relaunch;
-             fingerprints must match the clean run (r7)
-    execlosscanon all 50 canonical oracle checks with an executor
-             killed every 15 s for the whole sweep (r7)
-    skew     driver_sim on deterministically SKEWED sf0.01 fixtures —
-             hot customer (30% of orders), hot supplier, hot nation,
-             hot user/event-type, hot document domain + over-cap
-             boilerplate LSH bucket, hot embedding cell (r8)
-    numfuzz  hostile_probe --numfuzz: seed-pinned numeric/temporal
-             mutation — ±0, subnormals, 2^53±1, int32/int64 edges,
-             decimal-tie fractions on every money/rate column; negative
-             epochs, DST instants, 32-bit rollover, year-9999 on the
-             batch date columns (r8)
-    largestate streaming dropDuplicates at 10M distinct keys ×
-             {HDFS, RocksDB} provider × {uninterrupted, restart-after-
-             2-batches} — four identical fingerprints + measured state
-             memory (r8)
-    latefuzz event-time hostility (r9): bounded-disorder and
-             arbitrary-order paced replays of every streaming oracled
-             query, plus beyond-watermark injection against an EXACT
-             append-mode drop model (see scripts/latefuzz_probe.py)
-    maxhostile every conf-hostility axis stacked at once: Kryo +
-             off-heap + interpreted expressions + Arrow batch 7 +
-             1 MiB splits + 7 cores + no broadcasts, under ET timezone
-             and Turkish JVM locale (r8)
-    fuzz2 / numfuzz2 / latefuzz2  second independent seed per fuzz
-             axis — two draws per round certify the generator, not one
-             lucky seed (r10)
-    epochgc  scripts/epoch_longevity_probe.py 120 — epoch-store GC
-             census asserted bounded over 120 epochs + a racing reader
-             certifying the concurrent-read rule live (r10)
-    sf1      scripts/sf1_gate.py — sf1.0-equivalent fixtures (~6M
-             lineitem, deterministic 10× replication), full 50-slot
-             oracle sweep + same-session sf0.1-vs-sf1.0 headline
-             linearity with a knee assertion (r10); cache hits verify
-             per-table content fingerprints (r12)
-    scalespot scripts/scale_spot_probe.py — mult=40 cross-scale spot
-             probe of the capped dedup composition + flagship
-             aggregate, layout-matched 1× vs 40× in one session, knee
-             assertion (r12)
+Gate names (usable with --skip / --only, comma-separated) and their
+commands: the commented ``GATES`` dict below is the one map; ``GATE_ENV``
+holds the per-gate environment.
 
 Exit 0 iff every executed gate passed. Each gate runs in its own
 subprocess (its own JVM) so a crashed session can't poison the rest.
@@ -117,18 +39,29 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 STAMP_WALL_BUDGET_S = 7200
 
 GATES: dict[str, list[str]] = {
+    # the suite (sf0.001); the driver's t2 gate, all 50 canonical slots
+    # (sf0.01); the contract bench and the production-shape bench
+    # (sf0.1 via GATE_ENV)
     "pytest": [sys.executable, "-m", "pytest", "tests/", "-q"],
     "driver": [sys.executable, "scripts/driver_sim.py"],
     "bench": [sys.executable, "bench.py"],
     "extbench": [sys.executable, "scripts/bench_extended.py"],
+    # every oracled query on hostile string content, NULL-injected and
+    # empty fixtures (CLAUDE.md invariant 7)
     "hostile": [sys.executable, "scripts/hostile_probe.py"],
     "nulls": [sys.executable, "scripts/hostile_probe.py", "--nulls"],
     "empty": [sys.executable, "scripts/hostile_probe.py", "--empty"],
+    # operational (r6-r7): streaming crash/replay + state reload;
+    # 2000-file layouts; 50 queries on 8 threads of one session;
+    # separate executor JVMs (50 canonical + row-identical production
+    # shapes); injected task failures x4 attempts (canonical + np twins
+    # bit-identical)
     "restart": [sys.executable, "scripts/restart_probe.py"],
     "smallfiles": [sys.executable, "scripts/small_files_probe.py"],
     "concurrency": [sys.executable, "scripts/concurrency_probe.py"],
     "localcluster": [sys.executable, "scripts/localcluster_probe.py"],
     "retry": [sys.executable, "scripts/retry_probe.py"],
+    # seed-pinned random hostile content over all oracled queries (r7)
     "fuzz": [sys.executable, "scripts/hostile_probe.py", "--fuzz"],
     # plan-variance (r7): the oracle targets are plan-independent, so
     # re-running the full canonical sweep under a different physical-

@@ -30,24 +30,19 @@ import os
 import sys
 import time
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO_ROOT not in sys.path:
-    sys.path.insert(0, REPO_ROOT)
-SCRIPTS = os.path.dirname(os.path.abspath(__file__))
-if SCRIPTS not in sys.path:
-    sys.path.insert(0, SCRIPTS)
+import probekit  # noqa: F401 — first: puts the repo root on sys.path
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import functions as F
 
-import bench  # noqa: E402 — materialize (full-column noop sink)
-from bench_extended import _mult_docs  # noqa: E402 — the invariant-23 rule
-from sf1_gate import KNEE_SLACK  # noqa: E402 — one knee rule, one source
-from hive_plan_service_spark.session import (  # noqa: E402
+import bench  # materialize (full-column noop sink)
+from bench_extended import _mult_docs  # mult× documents (probekit rule)
+from sf1_gate import KNEE_SLACK  # one knee rule, one source
+from hive_plan_service_spark.session import (
     default_parallelism,
     get_spark,
     process_scratch_dir,
 )
-from hive_plan_service_spark.sources.catalog import register_tables  # noqa: E402
+from hive_plan_service_spark.sources.catalog import register_tables
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

@@ -31,14 +31,15 @@ bit-identical):
 - customer/orders/lineitem/supplier/part: per-copy key shifts by
   copy × (max_key + 1) on every FK pair, so joins only match within a
   copy and per-copy group structure is preserved
-  (scripts/relational_scale_probe.py precedent, widened to all FKs).
+  (``git show ad4964a:scripts/relational_scale_probe.py`` precedent,
+  widened to all FKs).
 - events: event_id/user_id shifted — 10× users over the same time
   span, the realistic stream scale-up (window/session/state ops get
   10× keys, not 10× span).
 - documents: doc_id shifted, every word suffixed "_<copy>" (textually
   disjoint copies: near-dup pair structure preserved per copy,
-  cross-copy collisions impossible — scripts/scale_probe.py
-  precedent); n_chars recomputed to stay consistent with the text.
+  cross-copy collisions impossible — ``probekit.mult_docs``'s
+  suffix); n_chars recomputed to stay consistent with the text.
 - embeddings: vec_id shifted, vector cyclically rotated by
   copy % dim positions — a permutation is orthogonal, so ALL
   intra-copy dot products/norms are preserved exactly while

@@ -54,9 +54,8 @@ import sys
 import tempfile
 import time
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO_ROOT not in sys.path:
-    sys.path.insert(0, REPO_ROOT)
+import probekit
+from probekit import REPO_ROOT
 
 BATCH_QUERIES = ("b29_text_quality", "b27_dedup_minhash_lsh")
 STREAM_QUERIES = ("b22_stream_tumbling_window",)
@@ -74,7 +73,6 @@ def _run_layout(sf_dir: str, queries: tuple) -> None:
     from hive_plan_service_spark.session import get_spark
     from hive_plan_service_spark.sources.catalog import register_tables
     from hive_plan_service_spark.plans.registry import all_queries
-    from scripts.spill_probe import parse_event_log
 
     spark = get_spark(
         app_name="hpss-small-files",
@@ -96,7 +94,7 @@ def _run_layout(sf_dir: str, queries: tuple) -> None:
             "hash": h,
         }
     spark.stop()
-    out.update(parse_event_log(log_dir))
+    out.update(probekit.parse_event_log(log_dir))
     shutil.rmtree(log_dir, ignore_errors=True)
     print(json.dumps(out), flush=True)
 

@@ -36,9 +36,12 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from hive_plan_service_spark.operators.bitmask import expand_groups_nested
 from hive_plan_service_spark.operators.counter import current_counter_value
 from hive_plan_service_spark.sources.catalog import register_tables
+from hive_plan_service_spark.sources.materialize import (
+    has_parquet,
+    refresh_entities,
+)
 
 ALLOW_ALL = ("mobile", "admin")  # plan-server.ts:25
 ADMIN_ONLY = ("admin",)          # plan-server.ts:26
@@ -86,39 +89,17 @@ class PlanService:
             return err
         try:
             register_tables(self.spark, self.sf_dir)
-            # stage 1: plan entities (processor:29–42)
-            self.spark.table("plans").write.mode("overwrite").parquet(
-                self._path("plan_entities")
-            )
-            # stage 2 joins stage 1's *materialized* output (processor:58,79–80)
-            plans = self.spark.read.parquet(self._path("plan_entities"))
-            expand_groups_nested(
-                self.spark.table("plan_groups"), plans
-            ).write.mode("overwrite").parquet(self._path("plan_group_entities"))
+            refresh_entities(self.spark, self.warehouse)
             return {"code": 200, "data": "okay"}
         except Exception as e:  # processor:82–85 error envelope
             return {"code": 500, "msg": str(e)}
 
     # -- entity reads (A7/A8) ----------------------------------------------
     def get_plans(self, role: str = "mobile") -> dict[str, Any]:
-        if err := self._check(role, ALLOW_ALL):
-            return err
-        try:
-            df = self.spark.read.parquet(self._path("plan_entities"))
-            data = [r.asDict() for r in df.collect()]
-        except Exception:
-            data = []  # empty cache → empty list (hvals semantics, server:32)
-        return {"code": 200, "data": data}
+        return self._read_entities("plan_entities", role)
 
     def get_plan_groups(self, role: str = "mobile") -> dict[str, Any]:
-        if err := self._check(role, ALLOW_ALL):
-            return err
-        try:
-            df = self.spark.read.parquet(self._path("plan_group_entities"))
-            data = [r.asDict(recursive=True) for r in df.collect()]
-        except Exception:
-            data = []  # empty cache → empty list (hvals semantics, server:42)
-        return {"code": 200, "data": data}
+        return self._read_entities("plan_group_entities", role)
 
     # -- counter family (A9–A12) -------------------------------------------
     def increase_joined_count(self, role: str = "admin") -> dict[str, Any]:
@@ -151,6 +132,20 @@ class PlanService:
     def _path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
 
+    def _read_entities(self, name: str, role: str) -> dict[str, Any]:
+        if err := self._check(role, ALLOW_ALL):
+            return err
+        path = self._path(name)
+        if not has_parquet(path):
+            # empty cache → empty list (hvals semantics, server:32,42);
+            # only a never-written materialization reads as empty
+            return {"code": 200, "data": []}
+        try:
+            rows = self.spark.read.parquet(path).collect()
+        except Exception as e:  # a corrupt cache is an error, not empty
+            return {"code": 500, "msg": str(e)}
+        return {"code": 200, "data": [r.asDict(recursive=True) for r in rows]}
+
     def _append_counter(self, op: str, delta: int, set_value: int | None) -> None:
         self._counter_seq += 1
         from datetime import datetime, timezone
@@ -170,9 +165,8 @@ class PlanService:
 
     def _counter_value(self) -> int:
         path = self._path("counter_log")
-        try:
-            log = self.spark.read.schema(_COUNTER_SCHEMA).parquet(path)
-        except Exception:
+        if not has_parquet(path):
             return 0  # missing key → 0 (plan-server.ts:80–81)
+        log = self.spark.read.schema(_COUNTER_SCHEMA).parquet(path)
         row = current_counter_value(log).collect()[0]
         return int(row["joined_count"])

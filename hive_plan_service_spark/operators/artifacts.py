@@ -16,17 +16,13 @@ ships at most cap+1 rows to the driver before failing loudly.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 #: Max rows a driver-side artifact may have. Generous vs every real
 #: artifact (query batches ≤ a few hundred, centroid sets ≤ a few
 #: thousand, codebooks subspaces·codes ≤ 4096) while far below anything
-#: corpus-proportional. Env-overridable for deliberate large batches.
-MAX_DRIVER_ARTIFACT_ROWS = int(
-    os.environ.get("SPARK_GRAFT_MAX_DRIVER_ROWS", "65536")
-)
+#: corpus-proportional.
+MAX_DRIVER_ARTIFACT_ROWS = 65536
 
 
 def bounded_collect(df: DataFrame, what: str) -> list:
@@ -37,8 +33,7 @@ def bounded_collect(df: DataFrame, what: str) -> list:
     if len(rows) > MAX_DRIVER_ARTIFACT_ROWS:
         raise ValueError(
             f"{what}: driver-side artifact exceeds the fixed-size cap "
-            f"({MAX_DRIVER_ARTIFACT_ROWS} rows; set "
-            "SPARK_GRAFT_MAX_DRIVER_ROWS to raise deliberately). "
+            f"({MAX_DRIVER_ARTIFACT_ROWS} rows). "
             "A corpus-proportional relation does not belong on the "
             "driver — it would OOM at 100 TB."
         )

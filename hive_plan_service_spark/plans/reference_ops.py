@@ -9,9 +9,6 @@ the same shapes from identical parquet. The service-level composition
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +24,7 @@ from hive_plan_service_spark.sources.catalog import (
     ORACLE_PLANS_CTE,
     register_tables,
 )
+from hive_plan_service_spark.sources.materialize import refresh_entities
 
 FLAT_EXPANSION_SQL = f"""
 WITH {ORACLE_PLANS_CTE},
@@ -101,11 +99,12 @@ def a04_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# A5/A6 + A14 — materialize / refresh pipeline: write the denormalized
-# entity tables (stage 1 plans, stage 2 groups-joined-to-stage-1 — the
-# reference's only inter-operator ordering constraint, processor:79–80),
-# read them back, return the flattened result. Proves the parquet
-# round-trip of the nested ARRAY<STRUCT> shape.
+# A5/A6 + A14 — materialize / refresh pipeline: run the refresh job the
+# service and the streamed refresh run (sources/materialize.py
+# refresh_entities: stage 1 plans, stage 2 groups-joined-to-stage-1 —
+# the reference's only inter-operator ordering constraint,
+# processor:79–80), read it back, return the flattened result. Proves
+# the parquet round-trip of the nested ARRAY<STRUCT> shape.
 # --------------------------------------------------------------------------
 @register(
     "a05_materialize_roundtrip",
@@ -120,15 +119,14 @@ def a05_materialize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PID-keyed: scratch_root() is machine-shared and a fixed subdir
     # under overwrite mode races with concurrent suites (r7 transient).
     out = process_scratch_dir("hpss_materialized")
-    # stage 1: plan entities (processor:29–42)
-    plans = spark.table("plans")
-    plans.write.mode("overwrite").parquet(f"{out}/plan_entities")
-    # stage 2: group entities join *the materialized stage-1 output*
-    plans_materialized = spark.read.parquet(f"{out}/plan_entities")
-    nested = expand_groups_nested(spark.table("plan_groups"), plans_materialized)
-    nested.write.mode("overwrite").parquet(f"{out}/plan_group_entities")
-    back = spark.read.parquet(f"{out}/plan_group_entities")
-    return back.select(
+    return flatten_group_entities(spark.read.parquet(refresh_entities(spark, out)))
+
+
+def flatten_group_entities(nested: DataFrame) -> DataFrame:
+    """Nested group entities → one ``(group_id, group_title, mask,
+    plan_id, plan_title, optional)`` row per member plan (the scalar-flat
+    shape the ``FLAT_EXPANSION_SQL`` oracle checks)."""
+    return nested.select(
         F.col("id").alias("group_id"),
         F.col("title").alias("group_title"),
         "mask",

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from hive_plan_service_spark.plans.reference_ops import (
     COUNTER_CURRENT_VALUE_SQL,
     FLAT_EXPANSION_SQL,
+    flatten_group_entities,
 )
 from hive_plan_service_spark.plans.registry import register
 from hive_plan_service_spark.sources.catalog import register_tables, table_path
@@ -161,22 +162,9 @@ def b24_stream_counter_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("A13", "B25"),
 )
 def b25_stream_refresh_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     register_tables(spark, sf_dir)
-    nested = streaming_refresh(spark, table_path(sf_dir, "events"), _workdir())
-    return nested.select(
-        F.col("id").alias("group_id"),
-        F.col("title").alias("group_title"),
-        "mask",
-        F.explode("plans").alias("p"),
-    ).select(
-        "group_id",
-        "group_title",
-        "mask",
-        F.col("p.id").alias("plan_id"),
-        F.col("p.title").alias("plan_title"),
-        F.col("p.optional").alias("optional"),
+    return flatten_group_entities(
+        streaming_refresh(spark, table_path(sf_dir, "events"), _workdir())
     )
 
 
@@ -399,7 +387,7 @@ def b27_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_tables(spark, sf_dir)
     ingest = StreamingDedupIngest(
-        spark, table_path(sf_dir, "documents"), _workdir(), hash_fn="portable"
+        spark, table_path(sf_dir, "documents"), _workdir()
     )
     return ingest.run().orderBy("doc_id").select(
         "doc_id", F.col("is_dup").cast("boolean").alias("is_dup")

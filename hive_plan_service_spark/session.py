@@ -80,9 +80,7 @@ def default_parallelism() -> int:
 #: filling up surfaces as mid-query "No space left on device". 8 GiB
 #: covers sf0.1 spill many times over; larger local probes should set
 #: SPARK_GRAFT_SCRATCH to a disk path explicitly.
-_TMPFS_MIN_FREE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_TMPFS_MIN_FREE", str(8 * 1024**3))
-)
+_TMPFS_MIN_FREE_BYTES = 8 * 1024**3
 
 
 def _free_bytes(path: str) -> int:
@@ -245,28 +243,12 @@ def heap_scaled_rows(
     """Rows-per-buffer such that all concurrent tasks' per-task buffers
     fit ``budget_fraction`` of the JVM heap (invariant 27's sizing rule
     for UNMANAGED buffers — they cannot spill). Used for Arrow batches
-    (:func:`arrow_batch_rows`) and the columnar cache builder
-    (operators/kmeans.py); parquet writer row groups use the byte-level
+    and the columnar cache builder (:func:`apply_wide_row_conf`,
+    operators/kmeans.py); parquet writer row groups use the byte-level
     twin ``sources/writers.safe_parquet_block_bytes``."""
-    from hive_plan_service_spark.sources.writers import (
-        is_plain_local,
-        jvm_heap_bytes,
-        parse_mem,
-    )
+    from hive_plan_service_spark.sources.writers import task_heap
 
-    try:
-        heap = parse_mem(spark.conf.get("spark.executor.memory"))
-        cores = int(spark.conf.get("spark.executor.cores", "1"))
-    except Exception:
-        heap, cores = None, None
-    master = spark.sparkContext.master
-    if is_plain_local(master) or heap is None:
-        # plain local (driver == executor): the running JVM's real -Xmx,
-        # not the often-unset driver conf (r6 VERDICT #5). local-cluster
-        # and real clusters size from spark.executor.memory above.
-        heap = (jvm_heap_bytes(spark) if is_plain_local(master) else None) \
-            or parse_mem(spark.conf.get("spark.driver.memory", "1g"))
-        cores = spark.sparkContext.defaultParallelism
+    heap, cores = task_heap(spark)
     rows = int(heap * budget_fraction / max(1, cores) / max(1, row_bytes))
     # G1 humongous guard: a single buffer at or above half a G1 region
     # (region = clamp(heap/2048, 1 MiB, 32 MiB)) is a "humongous"
@@ -277,32 +259,6 @@ def heap_scaled_rows(
     region = max(1 << 20, min(32 << 20, heap // 2048))
     rows = min(rows, (region // 2) // max(1, row_bytes))
     return max(floor, min(cap, rows))
-
-
-def arrow_batch_rows(
-    spark: SparkSession,
-    row_bytes: int,
-    *,
-    budget_fraction: float = 0.05,
-    floor: int = 256,
-    cap: int = 10_000,
-) -> int:
-    """Heap-aware ``spark.sql.execution.arrow.maxRecordsPerBatch`` for
-    WIDE rows (embedding columns).
-
-    Found by the r6 spill certification: the default 10,000-row Arrow
-    batch is sized for narrow relational rows. A 768-dim float corpus
-    makes each batch ~30 MB of JNI-pinned allocation PER CONCURRENT
-    TASK (the observed 4 GiB-heap failure was a GCLocker retry on a
-    33 MB allocation with 32 tasks in flight) — like the parquet writer
-    buffers (sources/writers.py), this memory is unmanaged and cannot
-    spill. Callers running wide Pandas-UDF stages apply it via
-    ``spark.conf.set`` (runtime-settable).
-    """
-    return heap_scaled_rows(
-        spark, row_bytes,
-        budget_fraction=budget_fraction, floor=floor, cap=cap,
-    )
 
 
 def apply_wide_row_conf(spark: SparkSession, row_bytes: int) -> dict:

@@ -1,74 +1,63 @@
-"""Materialized views — the reference's O2 optimization, generalized.
+"""Materialized entity tables — the reference's O2 optimization.
 
 The reference's whole read path is a hand-built materialized view: the
 processor denormalizes Postgres into Redis and readers never touch the
-base tables (SURVEY.md §4 O2). OSS Spark has no automatic MV rewrite, so
-the engine replicates the reference's own approach as a first-class
-helper: build function → overwrite-committed parquet → reads routed to
-the materialization, with input-fingerprint staleness so refresh is
-skipped when sources are unchanged.
+base tables (SURVEY.md §4 O2). Here the refresh job writes overwrite-
+committed parquet (job-commit atomicity ↔ MULTI/EXEC, processor:31,41);
+the service refresh, the streamed refresh (B25) and ``a05`` all run
+:func:`refresh_entities`. :func:`read_or_empty` is the one first-boot
+rule for reading a materialization no job has written yet.
 """
 
 from __future__ import annotations
 
-import json
+import glob
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from hive_plan_service_spark.operators.bitmask import expand_groups_nested
 
 
-def _fingerprint(paths: list[str]) -> str:
-    parts = []
-    for p in sorted(paths):
-        if os.path.isdir(p):
-            for f in sorted(os.listdir(p)):
-                fp = os.path.join(p, f)
-                parts.append(f"{fp}:{os.path.getmtime(fp)}:{os.path.getsize(fp)}")
-        elif os.path.exists(p):
-            parts.append(f"{p}:{os.path.getmtime(p)}:{os.path.getsize(p)}")
-    return "|".join(parts)
+def refresh_entities(spark: SparkSession, out_dir: str) -> str:
+    """The two-stage refresh job over the registered ``plans`` and
+    ``plan_groups`` views; returns the group-entities path.
 
-
-class MaterializedView:
-    """Overwrite-refreshed parquet materialization of a build function.
-
-    ``inputs`` are the source paths whose modification fingerprint
-    decides staleness. Refresh atomicity is the parquet job commit —
-    readers see the old or the new materialization, never a mix (the
-    MULTI/EXEC analog, processor:31,41).
+    Stage 1 writes ``<out_dir>/plan_entities`` (processor:29–42). Stage 2
+    joins the plan groups against stage 1's *committed* output, not the
+    source view (processor:58,79–80 — the reference's only
+    inter-operator ordering constraint), and writes
+    ``<out_dir>/plan_group_entities``.
     """
+    plan_entities = os.path.join(out_dir, "plan_entities")
+    group_entities = os.path.join(out_dir, "plan_group_entities")
+    spark.table("plans").write.mode("overwrite").parquet(plan_entities)
+    plans = spark.read.parquet(plan_entities)
+    expand_groups_nested(spark.table("plan_groups"), plans).write.mode(
+        "overwrite"
+    ).parquet(group_entities)
+    return group_entities
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        name: str,
-        build: Callable[[], DataFrame],
-        inputs: list[str],
-        storage_dir: str,
-    ) -> None:
-        self.spark = spark
-        self.name = name
-        self.build = build
-        self.inputs = inputs
-        self.path = os.path.join(storage_dir, name)
-        self._meta = os.path.join(storage_dir, f"{name}.meta.json")
 
-    def is_fresh(self) -> bool:
-        if not os.path.exists(self._meta):
-            return False
-        with open(self._meta) as f:
-            return json.load(f).get("fingerprint") == _fingerprint(self.inputs)
+def has_parquet(path: str) -> bool:
+    """True iff the directory exists and holds at least one parquet file."""
+    return bool(
+        glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    )
 
-    def refresh(self, force: bool = False) -> bool:
-        """Rebuild if stale (or forced). Returns True when a rebuild ran."""
-        if not force and self.is_fresh():
-            return False
-        self.build().write.mode("overwrite").parquet(self.path)
-        with open(self._meta, "w") as f:
-            json.dump({"fingerprint": _fingerprint(self.inputs)}, f)
-        return True
 
-    def read(self) -> DataFrame:
-        self.refresh()
-        return self.spark.read.parquet(self.path)
+def read_or_empty(
+    spark: SparkSession, path: str, schema: T.StructType | str
+) -> DataFrame:
+    """``spark.read.parquet(path)``, or a zero-row frame of ``schema``
+    when no job has committed a parquet file there yet.
+
+    Empty feed (first boot): a missing directory, or one that GC left
+    file-less, would otherwise fail schema inference instead of reading
+    as empty (empty-fixture sweep, ROUND5_NOTES §13). ``schema`` only
+    shapes the empty frame; a present store is read as written.
+    """
+    if has_parquet(path):
+        return spark.read.parquet(path)
+    return spark.createDataFrame([], schema)

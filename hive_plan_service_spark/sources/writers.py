@@ -59,6 +59,33 @@ def jvm_heap_bytes(spark: SparkSession) -> int | None:
         return None
 
 
+def task_heap(spark: SparkSession) -> tuple[int, int]:
+    """(JVM heap bytes, concurrent tasks sharing it) for sizing per-task
+    UNMANAGED buffers.
+
+    Local mode: the driver heap is the executor heap and every core may
+    run a task at once. Cluster mode: per-executor heap / executor cores,
+    read from the session conf.
+    """
+    conf = spark.conf
+    try:
+        heap = parse_mem(conf.get("spark.executor.memory"))
+        cores = int(conf.get("spark.executor.cores", "1"))
+    except Exception:
+        heap, cores = None, None
+    master = spark.sparkContext.master
+    if is_plain_local(master) or heap is None:
+        # plain local (driver == executor): the running JVM's real -Xmx,
+        # not the often-unset driver conf (r6 VERDICT #5); non-local
+        # with no executor conf keeps the conservative driver-conf
+        # fallback. local-cluster and real clusters size from
+        # spark.executor.memory above.
+        heap = (jvm_heap_bytes(spark) if is_plain_local(master) else None) \
+            or parse_mem(conf.get("spark.driver.memory", "1g"))
+        cores = spark.sparkContext.defaultParallelism
+    return heap, cores
+
+
 def safe_parquet_block_bytes(
     spark: SparkSession,
     *,
@@ -67,11 +94,7 @@ def safe_parquet_block_bytes(
     cap: int = 128 << 20,
 ) -> int:
     """Row-group size such that all concurrent write tasks' buffers fit
-    in ``heap_budget_fraction`` of the JVM heap.
-
-    Local mode: the driver heap is the executor heap and every core may
-    write at once. Cluster mode: per-executor heap / executor cores —
-    the same rule, read from the session conf.
+    in ``heap_budget_fraction`` of the JVM heap (:func:`task_heap`).
 
     The fraction budgets the READ side too, which is why it is small:
     a row group is also the atomic read unit — the parquet reader's
@@ -82,20 +105,7 @@ def safe_parquet_block_bytes(
     certification heap gets ~4 MiB row groups; any heap ≥ 128 GiB
     keeps the scan-efficient 128 MiB default.
     """
-    conf = spark.conf
-    try:
-        heap = parse_mem(conf.get("spark.executor.memory"))
-        cores = int(conf.get("spark.executor.cores", "1"))
-    except Exception:
-        heap, cores = None, None
-    master = spark.sparkContext.master
-    if is_plain_local(master) or heap is None:
-        # plain local: the running JVM's real -Xmx beats the conf (which
-        # a driver-provided session may never set); non-local with no
-        # executor conf keeps the conservative driver-conf fallback
-        heap = (jvm_heap_bytes(spark) if is_plain_local(master) else None) \
-            or parse_mem(conf.get("spark.driver.memory", "1g"))
-        cores = spark.sparkContext.defaultParallelism
+    heap, cores = task_heap(spark)
     budget = int(heap * heap_budget_fraction / max(1, cores))
     return max(floor, min(cap, budget))
 

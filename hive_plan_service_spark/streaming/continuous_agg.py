@@ -47,6 +47,7 @@ from hive_plan_service_spark.functions.exact import (
     floor_div,
     money,
 )
+from hive_plan_service_spark.sources.materialize import read_or_empty
 from hive_plan_service_spark.streaming import epoch_store
 from hive_plan_service_spark.streaming.source import events_stream
 
@@ -83,7 +84,13 @@ class ContinuousHourlyRollup:
 
     # -- write helpers ------------------------------------------------------
 
-    def _write_day_partitioned(self, df: DataFrame, path: str, n_days: int) -> None:
+    def _write_day_partitioned(
+        self,
+        df: DataFrame,
+        path: str,
+        n_days: int,
+        partition_cols: tuple[str, ...] = ("day_bucket",),
+    ) -> None:
         """Day-partitioned dynamic-overwrite write with one task PER DAY.
 
         AQE would coalesce the tiny shuffle to a single task that then
@@ -95,16 +102,10 @@ class ContinuousHourlyRollup:
         before = conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
         conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
         try:
-            (
-                df.repartition(max(n_days, 1), "day_bucket")
-                .write.mode("overwrite")
-                # "DYNAMIC" pre-uppercased: Spark's per-write option path
-                # upper-cases with the JVM DEFAULT locale, so a lowercase
-                # "dynamic" becomes "DYNAMİC" under tr_TR and the enum
-                # lookup throws (found by the r7 locale gate)
-                .option("partitionOverwriteMode", "DYNAMIC")
-                .partitionBy("day_bucket")
-                .parquet(path)
+            epoch_store.write_partitions(
+                df.repartition(max(n_days, 1), "day_bucket"),
+                path,
+                *partition_cols,
             )
         finally:
             conf.set("spark.sql.adaptive.coalescePartitions.enabled", before)
@@ -148,15 +149,12 @@ class ContinuousHourlyRollup:
                 return
             # one flat directory, one commit; day-sorted single file so
             # later touched-day reads prune on row-group stats
-            (
+            epoch_store.write_epoch(
                 staged.coalesce(1)
                 .sortWithinPartitions("day_bucket")
-                .select(*_PARTIAL_COLS)
-                .withColumn("epoch", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "DYNAMIC")
-                .partitionBy("epoch")
-                .parquet(self.seen_raw)
+                .select(*_PARTIAL_COLS),
+                self.seen_raw,
+                epoch_id,
             )
             raw_epochs = epoch_store.scan_epoch_dirs(self.seen_raw)
             have_bases = os.path.isdir(self.seen_base) and any(
@@ -269,27 +267,15 @@ class ContinuousHourlyRollup:
             .withColumn("epoch", F.lit(epoch_store.base_epoch(epoch_id)))
         ).persist()
         try:
-            days = raw_days
-            conf = self.spark.conf
-            before = conf.get(
-                "spark.sql.adaptive.coalescePartitions.enabled", "true"
+            self._write_day_partitioned(
+                merged_all,
+                self.seen_base,
+                len(raw_days),
+                partition_cols=("day_bucket", "epoch"),
             )
-            conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-            try:
-                (
-                    merged_all.repartition(max(len(days), 1), "day_bucket")
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "DYNAMIC")
-                    .partitionBy("day_bucket", "epoch")
-                    .parquet(self.seen_base)
-                )
-            finally:
-                conf.set(
-                    "spark.sql.adaptive.coalescePartitions.enabled", before
-                )
             # lazy GC — correctness never depends on these deletes
             base = epoch_store.base_epoch(epoch_id)
-            for day in days:
+            for day in raw_days:
                 epoch_store.gc_stale_epochs(
                     os.path.join(self.seen_base, f"day_bucket={day}"), base
                 )
@@ -298,26 +284,20 @@ class ContinuousHourlyRollup:
             merged_all.unpersist()
 
     def run(self, max_files_per_trigger: int | None = None) -> DataFrame:
-        stream = events_stream(
-            self.spark, self.events_path, max_files_per_trigger=max_files_per_trigger
+        epoch_store.drain(
+            events_stream(
+                self.spark,
+                self.events_path,
+                max_files_per_trigger=max_files_per_trigger,
+            ),
+            self._refresh_buckets,
+            self.ckpt,
         )
-        q = (
-            stream.writeStream.foreachBatch(self._refresh_buckets)
-            .option("checkpointLocation", self.ckpt)
-            .trigger(availableNow=True)
-            .start()
+        # empty feed (first boot): no batch ever materialized the rollup
+        # — a zero-row frame in the public projection's shape
+        return read_or_empty(
+            self.spark,
+            self.out,
+            "hour_bucket bigint, event_type string, n bigint, "
+            "total_value double, day_bucket bigint",
         )
-        q.awaitTermination()
-        from hive_plan_service_spark.streaming.counter import _has_parquet
-
-        if not _has_parquet(self.out):
-            # empty feed (first boot): no batch ever materialized the
-            # rollup — a zero-row frame in the public projection's shape
-            # instead of a PATH_NOT_FOUND on the never-created store
-            # (empty-fixture sweep, ROUND5_NOTES §13)
-            return self.spark.createDataFrame(
-                [],
-                "hour_bucket bigint, event_type string, n bigint, "
-                "total_value double, day_bucket bigint",
-            )
-        return self.spark.read.parquet(self.out)

@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 
 from hive_plan_service_spark.operators.counter import current_counter_value
 from hive_plan_service_spark.sources.catalog import counter_events_from
+from hive_plan_service_spark.sources.materialize import read_or_empty
+from hive_plan_service_spark.streaming.epoch_store import drain, write_epoch
 from hive_plan_service_spark.streaming.source import events_stream
 
 
@@ -31,46 +33,16 @@ def streaming_counter_value(
     own partition instead of double-counting (idempotent sink).
     """
     log_dir = os.path.join(workdir, "counter_log")
-    ckpt = os.path.join(workdir, "ckpt_counter")
-
     ce = counter_events_from(events_stream(spark, events_path))
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            # pre-uppercased: Spark default-locale-uppercases this option
-            # value ("dynamic"→"DYNAMİC" under tr_TR; r7 locale gate)
-            .option("partitionOverwriteMode", "DYNAMIC")
-            .partitionBy("epoch")
-            .parquet(log_dir)
-        )
-
-    q = (
-        ce.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        ce,
+        lambda batch_df, epoch_id: write_epoch(batch_df, log_dir, epoch_id),
+        os.path.join(workdir, "ckpt_counter"),
     )
-    q.awaitTermination()
-    if _has_parquet(log_dir):
-        log = spark.read.parquet(log_dir).drop("epoch")
-    else:
-        # empty feed (first boot): no batch ever committed a partition —
-        # replay the fold over zero commands instead of failing schema
-        # inference on a file-less directory (empty-fixture sweep,
-        # ROUND5_NOTES §13)
-        log = spark.createDataFrame([], ce.schema)
+    # empty feed (first boot): no batch ever committed a partition —
+    # replay the fold over zero commands
+    log = read_or_empty(spark, log_dir, ce.schema).drop("epoch")
     return current_counter_value(log)
-
-
-def _has_parquet(path: str) -> bool:
-    """True iff the directory exists and holds at least one parquet file."""
-    import glob
-
-    return bool(
-        glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
 
 
 def fold_counter_batch(value: int, batch) -> int:

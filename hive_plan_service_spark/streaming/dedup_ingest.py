@@ -37,15 +37,26 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hive_plan_service_spark.operators.dedup import (
     banded_signatures,
     minhash_signatures,
 )
 from hive_plan_service_spark.session import tune
+from hive_plan_service_spark.sources.materialize import read_or_empty
 from hive_plan_service_spark.streaming import epoch_store
+from hive_plan_service_spark.streaming.source import file_stream
 
 _STORE_COLS = ("doc_a", "sig_a", "band", "bucket")
+# MinHash-LSH parameters: 16 hashes in 4 bands, est ≥ 0.5. The PORTABLE
+# hash family (operators/dedup.py) makes the whole flag pipeline DuckDB-
+# reproducible, so the registered query's oracle value-hash-checks the
+# STREAMING ingest end-to-end.
+_NUM_HASHES = 16
+_BANDS = 4
+_EST_THRESHOLD = 0.5
+_HASH_FN = "portable"
 
 
 class StreamingDedupIngest:
@@ -58,26 +69,14 @@ class StreamingDedupIngest:
         docs_path: str,
         workdir: str,
         *,
-        num_hashes: int = 16,
-        bands: int = 4,
-        est_threshold: float = 0.5,
         compact_after: int = 8,
-        hash_fn: str = "xxhash64",
     ):
         self.spark = spark
         self.docs_path = docs_path
         self.store = os.path.join(workdir, "sig_store")
         self.flags = os.path.join(workdir, "flags")
         self.ckpt = os.path.join(workdir, "ckpt_ingest")
-        self.num_hashes = num_hashes
-        self.bands = bands
-        self.est_threshold = est_threshold
         self.compact_after = compact_after
-        # hash family (operators/dedup.py): "xxhash64" is the throughput
-        # default; "portable" makes the whole flag pipeline DuckDB-
-        # reproducible — the registered query runs portable so even the
-        # STREAMING ingest is value-hash-checked by the driver's oracle.
-        self.hash_fn = hash_fn
 
     def _est(self) -> F.Column:
         agree = F.size(
@@ -86,7 +85,7 @@ class StreamingDedupIngest:
                 lambda eq: eq,
             )
         )
-        return agree / F.lit(float(self.num_hashes))
+        return agree / F.lit(float(_NUM_HASHES))
 
     def _read_store(self) -> DataFrame | None:
         """Live signature rows (newest base + epochs beyond it), or None.
@@ -108,11 +107,11 @@ class StreamingDedupIngest:
     def _ingest(self, batch_df: DataFrame, epoch_id: int) -> None:
         banded = banded_signatures(
             minhash_signatures(
-                batch_df, num_hashes=self.num_hashes, hash_fn=self.hash_fn
+                batch_df, num_hashes=_NUM_HASHES, hash_fn=_HASH_FN
             ),
-            num_hashes=self.num_hashes,
-            bands=self.bands,
-            hash_fn=self.hash_fn,
+            num_hashes=_NUM_HASHES,
+            bands=_BANDS,
+            hash_fn=_HASH_FN,
         )
         # the same banded subtree feeds three joins — materialize once,
         # not three plan copies (each re-runs signature aggregation)
@@ -144,7 +143,7 @@ class StreamingDedupIngest:
         dup_ids = (
             new.join(earlier, ["band", "bucket"])
             .filter(F.col("doc_a") < F.col("doc_b"))
-            .filter(self._est() >= self.est_threshold)
+            .filter(self._est() >= _EST_THRESHOLD)
             .select(F.col("doc_b").alias("doc_id"))
             .distinct()
         )
@@ -153,24 +152,10 @@ class StreamingDedupIngest:
             .join(dup_ids.withColumn("is_dup", F.lit(True)), "doc_id", "left")
             .select("doc_id", F.coalesce("is_dup", F.lit(False)).alias("is_dup"))
         )
-        (
-            flags.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            # pre-uppercased: Spark default-locale-uppercases this option
-            # value ("dynamic"→"DYNAMİC" under tr_TR; r7 locale gate)
-            .option("partitionOverwriteMode", "DYNAMIC")
-            .partitionBy("epoch")
-            .parquet(self.flags)
-        )
+        epoch_store.write_epoch(flags, self.flags, epoch_id)
         # duplicates append too: they are legitimate earliest-matches for
         # later arrivals (and this is what makes flags split-invariant)
-        (
-            same_batch.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "DYNAMIC")
-            .partitionBy("epoch")
-            .parquet(self.store)
-        )
+        epoch_store.write_epoch(same_batch, self.store, epoch_id)
         self._compact_store(epoch_id)
 
     def _compact_store(self, epoch_id: int) -> None:
@@ -188,14 +173,12 @@ class StreamingDedupIngest:
         if old_base is not None:
             live = epoch_store.valid_partials(live)
         base = epoch_store.base_epoch(epoch_id)
-        (
+        epoch_store.write_partitions(
             live.select(*_STORE_COLS)
             .withColumn("epoch", F.lit(base))
-            .repartition("bucket")  # cluster the probe join key
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "DYNAMIC")
-            .partitionBy("epoch")
-            .parquet(self.store)
+            .repartition("bucket"),  # cluster the probe join key
+            self.store,
+            "epoch",
         )
         epoch_store.gc_stale_epochs(self.store, base)
 
@@ -207,41 +190,22 @@ class StreamingDedupIngest:
         types are not contractual (CLAUDE.md invariant 3).
         """
         tune(self.spark)
-        if max_files_per_trigger is None:
-            # test hook (latefuzz gate, r9) — see streaming/source.py
-            env = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-            if env:
-                max_files_per_trigger = int(env)
         observed = self.spark.read.parquet(self.docs_path).schema
-        reader = self.spark.readStream.schema(observed)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        path = self.docs_path
-        if os.path.isfile(path):
-            reader = reader.option("pathGlobFilter", os.path.basename(path))
-            path = os.path.dirname(path)
-        q = (
-            reader.parquet(path)
-            .writeStream.foreachBatch(self._ingest)
-            .option("checkpointLocation", self.ckpt)
-            .trigger(availableNow=True)
-            .start()
+        epoch_store.drain(
+            file_stream(
+                self.spark,
+                self.docs_path,
+                observed,
+                max_files_per_trigger=max_files_per_trigger,
+            ),
+            self._ingest,
+            self.ckpt,
         )
-        q.awaitTermination()
-        from hive_plan_service_spark.streaming.counter import _has_parquet
-
-        if not _has_parquet(self.flags):
-            # empty feed (first boot): no batch ever wrote a flag
-            # partition — return a typed empty frame instead of failing
-            # schema inference (empty-fixture sweep, ROUND5_NOTES §13);
-            # doc_id's type follows the observed feed schema
-            from pyspark.sql.types import BooleanType, StructField, StructType
-
-            observed = self.spark.read.parquet(self.docs_path).schema
-            return self.spark.createDataFrame(
-                [],
-                StructType(
-                    [observed["doc_id"], StructField("is_dup", BooleanType())]
-                ),
-            )
-        return self.spark.read.parquet(self.flags).select("doc_id", "is_dup")
+        # empty feed (first boot): doc_id's type follows the observed
+        # feed schema
+        empty = T.StructType(
+            [observed["doc_id"], T.StructField("is_dup", T.BooleanType())]
+        )
+        return read_or_empty(self.spark, self.flags, empty).select(
+            "doc_id", "is_dup"
+        )

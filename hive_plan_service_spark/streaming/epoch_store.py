@@ -37,15 +37,55 @@ the base write but whose scan follows the raw deletes would drop the
 covered epochs with no error raised. (The maintainers themselves never
 race their own GC: refresh → compact → GC is serial within the
 foreachBatch callback.)
+
+Every streaming sink in the package writes through :func:`write_partitions`
+and runs its micro-batches through :func:`drain` — the one place each
+write-path rule lives.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def write_partitions(df: DataFrame, path: str, *partition_cols: str) -> None:
+    """Dynamic-overwrite parquet write: replaces exactly the partitions
+    ``df`` holds and leaves every other partition under ``path`` alone —
+    a replayed epoch overwrites its own partition instead of appending."""
+    (
+        df.write.mode("overwrite")
+        # "DYNAMIC" pre-uppercased: Spark's per-write option path
+        # upper-cases with the JVM DEFAULT locale, so a lowercase
+        # "dynamic" becomes "DYNAMİC" under tr_TR and the enum lookup
+        # throws (found by the r7 locale gate)
+        .option("partitionOverwriteMode", "DYNAMIC")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+
+
+def write_epoch(df: DataFrame, path: str, epoch: int) -> None:
+    """:func:`write_partitions` of ``df`` under partition ``epoch=<epoch>``."""
+    write_partitions(df.withColumn("epoch", F.lit(epoch)), path, "epoch")
+
+
+def drain(
+    stream: DataFrame, fn: Callable[[DataFrame, int], None], checkpoint: str
+) -> None:
+    """Run ``fn(batch_df, epoch_id)`` over every pending micro-batch of
+    ``stream`` (``availableNow``) and return once the stream is drained."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def base_epoch(epoch_id: int) -> int:

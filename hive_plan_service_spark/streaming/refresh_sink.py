@@ -14,7 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hive_plan_service_spark.operators.bitmask import expand_groups_nested
+from hive_plan_service_spark.sources.materialize import refresh_entities
+from hive_plan_service_spark.streaming.epoch_store import drain
 from hive_plan_service_spark.streaming.source import events_stream
 
 
@@ -28,25 +29,9 @@ def streaming_refresh(
     reference's CmdPacket carries no args) — its arrival is the command.
     """
     out = os.path.join(workdir, "materialized")
-    ckpt = os.path.join(workdir, "ckpt_refresh")
-
-    def _refresh(batch_df: DataFrame, epoch_id: int) -> None:
-        # stage 1: plan entities
-        spark.table("plans").write.mode("overwrite").parquet(
-            os.path.join(out, "plan_entities")
-        )
-        # stage 2 consumes stage 1's committed output (processor:79–80)
-        plans = spark.read.parquet(os.path.join(out, "plan_entities"))
-        expand_groups_nested(spark.table("plan_groups"), plans).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, "plan_group_entities"))
-
-    q = (
-        events_stream(spark, trigger_path)
-        .writeStream.foreachBatch(_refresh)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        events_stream(spark, trigger_path),
+        lambda batch_df, epoch_id: refresh_entities(spark, out),
+        os.path.join(workdir, "ckpt_refresh"),
     )
-    q.awaitTermination()
     return spark.read.parquet(os.path.join(out, "plan_group_entities"))

@@ -10,11 +10,14 @@ everything downstream is declarative.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hive_plan_service_spark.session import tune
+
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     """File schema of the events parquet; ``ts`` arrives either as a real
@@ -33,26 +36,20 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-def events_stream(
-    spark: SparkSession, path: str, *, max_files_per_trigger: int | None = None
+def file_stream(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType,
+    *,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """``readStream`` over an events parquet path (file or directory).
+    """``readStream`` of parquet at ``path`` (file or directory) with the
+    given file schema — the one file-source reader of the package.
 
     ``max_files_per_trigger=1`` turns a multi-file directory into an
     ordered sequence of micro-batches — how the watermark tests replay
     late data.
-
-    The file source needs the schema up front; a cached pyarrow footer
-    read decides whether ``ts`` is stored as BIGINT nanos or a real
-    timestamp (metadata only — no data scan, no Spark reader build; see
-    catalog.events_ts_is_long). Production queue sources declare their
-    schema explicitly anyway.
     """
-    import os
-
-    from hive_plan_service_spark.sources.catalog import events_ts_is_long
-
-    tune(spark)
     if max_files_per_trigger is None:
         # test hook (latefuzz gate, r9): pace a multi-file feed into
         # per-file micro-batches without changing any call site — the
@@ -61,10 +58,7 @@ def events_stream(
         env = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
         if env:
             max_files_per_trigger = int(env)
-    ts_is_long = events_ts_is_long(path)
-    reader = spark.readStream.schema(
-        _events_schema(T.LongType() if ts_is_long else T.TimestampType())
-    )
+    reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if os.path.isfile(path):
@@ -72,7 +66,30 @@ def events_stream(
         # filtered to exactly this file
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    raw = reader.parquet(path)
+    return reader.parquet(path)
+
+
+def events_stream(
+    spark: SparkSession, path: str, *, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """:func:`file_stream` over an events parquet path.
+
+    The file source needs the schema up front; a cached pyarrow footer
+    read decides whether ``ts`` is stored as BIGINT nanos or a real
+    timestamp (metadata only — no data scan, no Spark reader build; see
+    catalog.events_ts_is_long). Production queue sources declare their
+    schema explicitly anyway.
+    """
+    from hive_plan_service_spark.sources.catalog import events_ts_is_long
+
+    tune(spark)
+    ts_is_long = events_ts_is_long(path)
+    raw = file_stream(
+        spark,
+        path,
+        _events_schema(T.LongType() if ts_is_long else T.TimestampType()),
+        max_files_per_trigger=max_files_per_trigger,
+    )
     if ts_is_long:
         # integer-divide nanos → µs (exact) before exposing a timestamp
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -156,13 +156,13 @@ def _read_live(spark, m):
     (the invariant-7 write-then-read-back class), so each half is
     read only when it has parquet (a racing delete between the glob
     and the scan surfaces as the missing-file retry contract)."""
-    from hive_plan_service_spark.streaming.counter import _has_parquet
+    from hive_plan_service_spark.sources.materialize import has_parquet
 
     cols = ["hour_bucket", "event_type", "n", "sv", "day_bucket", "epoch"]
     parts = [
         spark.read.parquet(p).select(*cols)
         for p in (m.seen_raw, m.seen_base)
-        if _has_parquet(p)
+        if has_parquet(p)
     ]
     if not parts:
         return None
@@ -186,7 +186,7 @@ class RacingReader:
 
     # UNABLE_TO_INFER_SCHEMA is the same racing-delete contract surfacing
     # one step earlier (r13 stamp find, 1 in 645 reads): _read_live
-    # guards each store half with _has_parquet, but a GC pass that
+    # guards each store half with has_parquet, but a GC pass that
     # empties the dir BETWEEN that glob and read.parquet's own schema
     # inference leaves a file-less dir, which throws at inference time
     # instead of scan time. The certified response is identical — re-run

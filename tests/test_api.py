@@ -76,3 +76,18 @@ def test_reads_before_refresh_return_empty(spark, sf_dir, tmp_path):
     assert fresh.get_plans() == {"code": 200, "data": []}
     assert fresh.get_plan_groups() == {"code": 200, "data": []}
     assert fresh.get_joined_count()["data"] == 0
+
+
+def test_corrupt_materialization_reads_fail_loudly(spark, sf_dir, tmp_path):
+    # only a never-written cache is empty (hvals, server:32,42); an
+    # unreadable one answers the {code: 500} envelope (processor:82–85)
+    svc = PlanService(spark, sf_dir, warehouse=str(tmp_path / "wh"))
+    assert svc.refresh()["code"] == 200
+    bad = tmp_path / "wh" / "plan_entities"
+    for f in bad.iterdir():
+        f.unlink()
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
+    res = svc.get_plans()
+    assert res["code"] == 500
+    assert "msg" in res
+    assert svc.get_plan_groups()["code"] == 200

@@ -1,52 +1,39 @@
-"""Materialized-view layer: build-on-read, staleness skip, change detection."""
+"""Materialization reads (read-or-empty) and engine-level edge checks."""
 
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from hive_plan_service_spark.sources.catalog import register_tables
-from hive_plan_service_spark.sources.materialize import MaterializedView
 
 
-def test_materialized_view_lifecycle(spark, sf_dir, tmp_path):
-    register_tables(spark, sf_dir)
-    src = str(tmp_path / "src")
-    spark.table("orders").limit(100).write.parquet(src)
+def test_read_or_empty_on_missing_path(spark, tmp_path):
+    from hive_plan_service_spark.sources.materialize import read_or_empty
 
-    calls = {"n": 0}
+    schema = "doc_id bigint, is_dup boolean"
+    df = read_or_empty(spark, str(tmp_path / "never_written"), schema)
+    assert df.schema.simpleString() == "struct<doc_id:bigint,is_dup:boolean>"
+    assert df.count() == 0
 
-    def build():
-        calls["n"] += 1
-        return (
-            spark.read.parquet(src)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
 
-    mv = MaterializedView(spark, "orders_by_status", build, [src], str(tmp_path))
+def test_read_or_empty_after_gc_emptied_store(spark, tmp_path):
+    """A store whose every epoch GC deleted is a directory with no
+    parquet left (``_SUCCESS`` only): it reads as empty, not as a
+    schema-inference failure."""
+    from hive_plan_service_spark.sources.materialize import read_or_empty
+    from hive_plan_service_spark.streaming import epoch_store
 
-    first = {(r["o_orderstatus"], r["n"]) for r in mv.read().collect()}
-    assert calls["n"] == 1
-    direct = {
-        (r["o_orderstatus"], r["n"])
-        for r in build().collect()
-    }
-    calls["n"] -= 1  # the comparison build above doesn't count
-    assert first == direct
-
-    # unchanged inputs → read() skips the rebuild
-    mv.read().count()
-    assert calls["n"] == 1
-
-    # touch the source → stale → rebuilt exactly once
-    time.sleep(0.01)
-    part = next(p for p in os.listdir(src) if p.endswith(".parquet"))
-    os.utime(os.path.join(src, part))
-    mv.read().count()
-    assert calls["n"] == 2
+    store = str(tmp_path / "store")
+    epoch_store.write_epoch(spark.range(3).withColumnRenamed("id", "k"), store, 0)
+    epoch_store.gc_stale_epochs(store, keep_epoch=None)
+    assert os.path.isdir(store)
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    df = read_or_empty(spark, store, schema)
+    assert df.schema == schema
+    assert df.count() == 0
 
 
 def test_skewed_join_correctness(spark, sf_dir):

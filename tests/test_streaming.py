@@ -249,7 +249,7 @@ def test_stream_dedup_ingest_is_batch_split_invariant(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
 
     # batch truth: doc is dup iff some smaller-id doc is an LSH match
-    pairs = dd.minhash_lsh_pairs(docs, est_threshold=0.5)
+    pairs = dd.minhash_lsh_pairs(docs, est_threshold=0.5, hash_fn="portable")
     dup_truth = {r["doc_b"] for r in pairs.collect()}
     all_ids = {r["doc_id"] for r in docs.select("doc_id").collect()}
 
@@ -488,7 +488,9 @@ def test_stream_dedup_ingest_replay_and_compaction(spark, sf_dir, tmp_path):
     }
     truth = {
         r["doc_b"]
-        for r in dd.minhash_lsh_pairs(docs, est_threshold=0.5).collect()
+        for r in dd.minhash_lsh_pairs(
+            docs, est_threshold=0.5, hash_fn="portable"
+        ).collect()
     }
     assert flags == truth
 
@@ -518,6 +520,33 @@ def test_continuous_rollup_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
         for r in spark.read.parquet(maintainer.out).collect()
     }
     assert before == after, "replayed batch double-counted"
+
+
+def test_epoch_writer_replay_replaces_only_its_partition(spark, tmp_path):
+    """Replaying an epoch with the epoch writer overwrites that epoch's
+    partition and nothing else: a second epoch's files survive with
+    their names, sizes and mtimes untouched."""
+    from hive_plan_service_spark.streaming import epoch_store
+
+    store = str(tmp_path / "store")
+    epoch_store.write_epoch(spark.range(0, 5), store, 0)
+    epoch_store.write_epoch(spark.range(100, 103), store, 1)
+    e1 = os.path.join(store, "epoch=1")
+
+    def census(d):
+        paths = {n: os.path.join(d, n) for n in os.listdir(d)}
+        return {
+            n: (os.path.getsize(p), os.path.getmtime(p))
+            for n, p in paths.items()
+        }
+
+    e1_before = census(e1)
+    time.sleep(0.01)
+    epoch_store.write_epoch(spark.range(10, 12), store, 0)  # replay, new rows
+
+    assert census(e1) == e1_before
+    got = {(r["id"], r["epoch"]) for r in spark.read.parquet(store).collect()}
+    assert got == {(10, 0), (11, 0), (100, 1), (101, 1), (102, 1)}
 
 
 def test_state_store_provider_decision():

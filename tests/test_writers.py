@@ -108,14 +108,14 @@ def test_arrow_batch_rows_scales_with_row_width(spark):
     """Wide rows shrink the Arrow batch (JNI-pinned, unmanaged — the
     same class as parquet writer buffers); narrow rows keep the 10k
     default; clamps hold at both ends."""
-    from hive_plan_service_spark.session import arrow_batch_rows
+    from hive_plan_service_spark.session import heap_scaled_rows
 
-    narrow = arrow_batch_rows(spark, 100)
-    wide = arrow_batch_rows(spark, 768 * 8)
+    narrow = heap_scaled_rows(spark, 100)
+    wide = heap_scaled_rows(spark, 768 * 8)
     assert narrow == 10_000
     assert 256 <= wide <= 10_000
     assert wide <= narrow
     # floor: an absurdly wide row still yields a workable batch
-    assert arrow_batch_rows(spark, 1 << 30) == 256
+    assert heap_scaled_rows(spark, 1 << 30) == 256
     # cap: tiny rows never exceed the default
-    assert arrow_batch_rows(spark, 1) == 10_000
+    assert heap_scaled_rows(spark, 1) == 10_000

@@ -399,39 +399,34 @@ def minhash_lsh_pairs(
             .filter(F.col("_bn") <= max_bucket)
             .drop("_bn")
         )
-    if not keep_est:
-        l = banded.select(F.col("doc_id_").alias("doc_a"), "band", "bucket")
-        r = banded.select(F.col("doc_id_").alias("doc_b"), "band", "bucket")
-        return (
-            l.join(r, ["band", "bucket"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-    l = banded.select(
-        F.col("doc_id_").alias("doc_a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    r = banded.select(
-        F.col("doc_id_").alias("doc_b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
     # SQL text (r12): `D` suffix = DOUBLE literal, matching
     # F.lit(float(num_hashes)) — a bare SQL float would parse DECIMAL
-    est = F.expr(
-        "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y),"
-        f" eq -> eq)) / {float(num_hashes)}D"
-    )
-    # estimate + threshold BEFORE the pair dedup: est is a pure function
-    # of the pair (identical across its ≤``bands`` bucket collisions), so
-    # filter-then-dedup ≡ dedup-then-filter — but the dedup shuffle now
-    # carries only above-threshold pairs (Catalyst can't push a filter on
-    # a non-key column below the aggregate itself)
-    return (
-        l.join(r, ["band", "bucket"])
+    est = [
+        F.expr(
+            "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y),"
+            f" eq -> eq)) / {float(num_hashes)}D"
+        ).alias("est_jaccard")
+    ] if keep_est else []
+
+    def side(d: str) -> DataFrame:
+        sig = [F.col("sig").alias(f"sig_{d}")] if keep_est else []
+        return banded.select(
+            F.col("doc_id_").alias(f"doc_{d}"), *sig, "band", "bucket"
+        )
+
+    pairs = (
+        side("a").join(side("b"), ["band", "bucket"])
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", est.alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= est_threshold)
-        .dropDuplicates(["doc_a", "doc_b"])
+        .select("doc_a", "doc_b", *est)
     )
+    if keep_est:
+        # estimate + threshold BEFORE the pair dedup: est is a pure
+        # function of the pair (identical across its ≤``bands`` bucket
+        # collisions), so filter-then-dedup ≡ dedup-then-filter — but the
+        # dedup shuffle now carries only above-threshold pairs (Catalyst
+        # can't push a filter on a non-key column below the aggregate)
+        pairs = pairs.filter(F.col("est_jaccard") >= est_threshold)
+    return pairs.dropDuplicates(["doc_a", "doc_b"])
 
 
 def simhash_sketches(
@@ -570,32 +565,17 @@ def embedding_dup_pairs(
     its norm B times (the r4 cosine_topk fix, applied family-wide).
     """
     from hive_plan_service_spark.operators.vectors import (
-        cos_div_sql,
-        dot_sql,
-        norm_sql,
+        _PAIR_COS_SQL,
+        _norm_proj,
     )
 
-    idq, vecq, blockq = map(sql_ident, (id_col, vec_col, block_col))
-    a = embeddings.selectExpr(
-        f"{idq} AS vec_a",
-        f"{vecq} AS _va",
-        f"{norm_sql(vecq)} AS _na",
-        f"{blockq} AS _block",
-    )
-    b = embeddings.selectExpr(
-        f"{idq} AS vec_b",
-        f"{vecq} AS _vb",
-        f"{norm_sql(vecq)} AS _nb",
-        f"{blockq} AS _block",
-    )
+    block = f"{sql_ident(block_col)} AS _block"
+    a = embeddings.selectExpr(*_norm_proj(id_col, "vec_a", vec_col, "q"), block)
+    b = embeddings.selectExpr(*_norm_proj(id_col, "vec_b", vec_col, "c"), block)
     return (
         a.join(b, "_block")
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .selectExpr(
-            "vec_a",
-            "vec_b",
-            f"{cos_div_sql(dot_sql('_va', '_vb'), '_na', '_nb')} AS cos",
-        )
+        .selectExpr("vec_a", "vec_b", _PAIR_COS_SQL)
         .filter(F.col("cos") >= threshold)
     )
 
@@ -624,55 +604,33 @@ def centroid_blocked_dup_pairs(
     the exact blocked form. tests/test_llm_ops.py pins recall = 1 on a
     synthetic near-identical corpus and the measured fixture floor.
     """
-    from pyspark.sql import Window as W
-
     from hive_plan_service_spark.operators.vectors import (
-        cos_div_sql,
-        dot_sql,
-        norm_sql,
+        _PAIR_COS_SQL,
+        _norm_proj,
+        _top_k,
     )
 
-    idq, vecq = sql_ident(id_col), sql_ident(vec_col)
-    # per-side norm precompute (bit-identical scores — see
-    # embedding_dup_pairs); `_n` rides along the assignment so the
-    # verify stage reuses it instead of re-folding per pair
-    c = centroids.selectExpr(
-        "centroid_id AS _cid",
-        f"{vecq} AS _centroid",
-        f"{norm_sql(vecq)} AS _kn",
-    )
+    idq = sql_ident(id_col)
+    # per-side norms (bit-identical scores — see embedding_dup_pairs);
+    # `_qn` rides along the assignment so the verify stage reuses it
+    # instead of re-folding per pair
+    c = centroids.selectExpr(*_norm_proj("centroid_id", "_cid", vec_col, "c"))
     scored = (
-        embeddings.selectExpr(idq, vecq, f"{norm_sql(vecq)} AS _n")
+        embeddings.selectExpr(*_norm_proj(id_col, id_col, vec_col, "q"))
         .crossJoin(F.broadcast(c))
-        .selectExpr(
-            idq,
-            vecq,
-            "_n",
-            "_cid",
-            f"{cos_div_sql(dot_sql(vecq, '_centroid'), '_n', '_kn')}"
-            " AS _cos",
-        )
+        .selectExpr(idq, "_qvec", "_qn", "_cid", _PAIR_COS_SQL)
     )
-    w = W.partitionBy(id_col).orderBy(F.col("_cos").desc(), F.col("_cid"))
-    assigned = (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= nprobe)
-        .select(id_col, vec_col, "_n", F.col("_cid").alias("centroid_id"))
+    assigned = _top_k(scored, nprobe, by=id_col, tie="_cid").selectExpr(
+        idq, "_qvec", "_qn", "_cid AS centroid_id"
     )
-    a = assigned.selectExpr(
-        f"{idq} AS vec_a", f"{vecq} AS _va", "_n AS _na", "centroid_id"
-    )
+    a = assigned.selectExpr(f"{idq} AS vec_a", "_qvec", "_qn", "centroid_id")
     b = assigned.selectExpr(
-        f"{idq} AS vec_b", f"{vecq} AS _vb", "_n AS _nb", "centroid_id"
+        f"{idq} AS vec_b", "_qvec AS _cvec", "_qn AS _cn", "centroid_id"
     )
     return (
         a.join(b, "centroid_id")
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .selectExpr(
-            "vec_a",
-            "vec_b",
-            f"{cos_div_sql(dot_sql('_va', '_vb'), '_na', '_nb')} AS cos",
-        )
+        .selectExpr("vec_a", "vec_b", _PAIR_COS_SQL)
         .filter(F.col("cos") >= threshold)  # verify BEFORE pair dedup
         .dropDuplicates(["vec_a", "vec_b"])
     )

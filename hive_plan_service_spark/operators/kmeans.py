@@ -78,6 +78,22 @@ def _int_l2(a: Column, b: Column) -> Column:
     )
 
 
+def _first_k(q: DataFrame, k: int) -> DataFrame:
+    """The ungrouped seeds: the k smallest-``_pid`` rows, numbered ``_rn``.
+
+    A rank window (also over a constant group column, which Catalyst
+    folds to the same thing) would move EVERYTHING to one task with no
+    partial limit; orderBy+limit is TakeOrderedAndProject (per-partition
+    top-k, then k rows on the driver-side reduce), and the k-row
+    numbering window after it is trivially cheap.
+    """
+    return (
+        q.orderBy("_pid")
+        .limit(k)
+        .withColumn("_rn", F.row_number().over(W.orderBy("_pid")))
+    )
+
+
 def kmeans_integer(
     points: DataFrame,
     *,
@@ -110,15 +126,11 @@ def kmeans_integer(
     par = points.sparkSession.sparkContext.defaultParallelism
     q = q.repartition(par, *group_cols, "_pid").persist()
 
-    # Seeds: the k smallest-id points per group. Ungrouped (or a constant
-    # group column, which Catalyst folds to the same thing) a window
-    # would move EVERYTHING to one task with no partial limit — use
-    # orderBy+limit instead (TakeOrderedAndProject: per-partition top-k,
-    # then k rows on the driver-side reduce); the k-row code numbering
-    # window is then trivially cheap. Grouped, the rank-filter window
-    # gets Spark's WindowGroupLimit (per-map-task partial top-k), so the
-    # per-group sort task sees #partitions·k rows, not the corpus
-    # (pinned by tests/test_kmeans.py::test_seed_selection_plan_shape).
+    # Seeds: the k smallest-id points per group (ungrouped: _first_k).
+    # Grouped, the rank-filter window gets Spark's WindowGroupLimit
+    # (per-map-task partial top-k), so the per-group sort task sees
+    # #partitions·k rows, not the corpus (pinned by
+    # tests/test_kmeans.py::test_seed_selection_plan_shape).
     if group_cols:
         w = W.partitionBy(*g).orderBy("_pid")
         cents = (
@@ -126,11 +138,7 @@ def kmeans_integer(
             .filter(F.col("_rn") <= k)
         )
     else:
-        cents = (
-            q.orderBy("_pid")
-            .limit(k)
-            .withColumn("_rn", F.row_number().over(W.orderBy("_pid")))
-        )
+        cents = _first_k(q, k)
     cents = cents.select(
         *group_cols,
         (F.col("_rn") - 1).cast("int").alias("code"),
@@ -274,8 +282,35 @@ def kmeans_integer_np(
         from hive_plan_service_spark.operators.artifacts import (
             bounded_collect,
         )
+        from hive_plan_service_spark.operators.vectors import _batch_matrix
 
         scale, offset = float(SCALE), OFFSET
+
+        # Nested, so the kernel closures ship them by value (see
+        # vectors._np_kernels).
+        def _quantized(vecs):
+            # quantize()'s exact IEEE op sequence; loud guard (r5
+            # ADVICE): numpy's flooring // and Spark's truncating div
+            # agree only on non-negative operands — a component outside
+            # the |x| < 8 bound must fail, not silently break the
+            # bit-identical contract with the Column trainer.
+            x = _batch_matrix(vecs)
+            qx = np.floor((x + offset) * scale).astype(np.int64)
+            if (qx < 0).any():
+                raise ValueError(
+                    "kmeans_integer_np: quantized component < 0 "
+                    "(input outside the documented |x| < 8 bound)"
+                )
+            return qx
+
+        def _group_key(key):
+            # pandas surfaces a Spark NULL key as NaN/NaT (numeric/
+            # datetime dtypes) but the Arrow-cast collect and the Column
+            # path both see None — normalize so the three agree (r6
+            # ADVICE)
+            import pandas as pd
+
+            return tuple(None if pd.isna(v) else v for v in key)
 
         # Seeds: identical selection to the Column trainer (k smallest-id
         # points per group; TakeOrdered when ungrouped — same plan-shape
@@ -304,13 +339,7 @@ def kmeans_integer_np(
                 for pdf in batches:
                     if not len(pdf):
                         continue
-                    x = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                    qx = np.floor((x + offset) * scale).astype(np.int64)
-                    if (qx < 0).any():
-                        raise ValueError(
-                            "kmeans_integer_np: quantized component < 0 "
-                            "(input outside the documented |x| < 8 bound)"
-                        )
+                    qx = _quantized(pdf["_v"])
                     pids = pdf["_pid"].to_numpy()
                     # dropna=False: a NULL group key is a real window
                     # partition on the Column path — dropping it here
@@ -319,13 +348,8 @@ def kmeans_integer_np(
                         list(group_cols), sort=False, dropna=False
                     ).indices
                     for key, idx in gb.items():
-                        key_t = key if isinstance(key, tuple) else (key,)
-                        # pandas surfaces a Spark NULL key as NaN/NaT
-                        # (numeric/datetime dtypes) but the Arrow-cast
-                        # collect and the Column path both see None —
-                        # normalize here so the three agree (r6 ADVICE)
-                        key_t = tuple(
-                            None if pd.isna(v) else v for v in key_t
+                        key_t = _group_key(
+                            key if isinstance(key, tuple) else (key,)
                         )
                         cp = best.get(key_t)
                         np_pids, np_q = pids[idx], qx[idx]
@@ -366,11 +390,8 @@ def kmeans_integer_np(
                         dict(zip(group_cols, key_t), code=code, _q=qv)
                     )
         else:
-            seeds = (
-                raw.select("_pid", quantize(F.col("_v")).alias("_q"))
-                .orderBy("_pid")
-                .limit(k)
-                .withColumn("_rn", F.row_number().over(W.orderBy("_pid")))
+            seeds = _first_k(
+                raw.select("_pid", quantize(F.col("_v")).alias("_q")), k
             )
             # k rows — loudly capped like every driver-side artifact
             seed_rows = bounded_collect(
@@ -411,33 +432,13 @@ def kmeans_integer_np(
                 for pdf in batches:
                     if not len(pdf):
                         continue
-                    x = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                    qx = np.floor((x + offset) * scale).astype(np.int64)
-                    if (qx < 0).any():
-                        # Loud guard (r5 ADVICE): numpy's flooring // and
-                        # Spark's truncating div agree only on non-negative
-                        # operands — a component outside the |x| < 8 bound
-                        # must fail, not silently break the bit-identical
-                        # contract with the Column trainer.
-                        raise ValueError(
-                            "kmeans_integer_np: quantized component < 0 "
-                            "(input outside the documented |x| < 8 bound)"
-                        )
+                    qx = _quantized(pdf["_v"])
                     if group_cols:
                         keys = pd.MultiIndex.from_frame(pdf[list(group_cols)])
-                        # same NaN→None normalization as the seed kernel:
-                        # gindex is keyed by the Arrow-cast driver rows
-                        # where a NULL key is None, never NaN (r6 ADVICE)
+                        # gindex is keyed by the Arrow-cast driver rows,
+                        # where a NULL key is None, never NaN
                         gi_rows = np.fromiter(
-                            (
-                                gindex[
-                                    tuple(
-                                        None if pd.isna(v) else v
-                                        for v in t
-                                    )
-                                ]
-                                for t in keys
-                            ),
+                            (gindex[_group_key(t)] for t in keys),
                             dtype=np.int64,
                             count=len(pdf),
                         )

@@ -59,10 +59,121 @@ def cos_div_sql(num: str, n1: str, n2: str) -> str:
 
 
 #: Exact per-pair score over the ``_qvec``/``_cvec`` vectors and their
-#: ``_qn``/``_cn`` norms, the shape every top-k operator below projects.
+#: ``_qn``/``_cn`` norms, the shape :func:`_norm_proj` projects — the one
+#: cosine of every similarity operator (vectors, kmeans-blocked dedup).
 _PAIR_COS_SQL = (
     cos_div_sql(dot_sql("_qvec", "_cvec"), "_qn", "_cn") + " AS cos"
 )
+
+
+def _norm_proj(id_col: str, alias: str, vec: str, side: str) -> list[str]:
+    """``<id> AS <alias>, <vec> AS _<side>vec, <norm> AS _<side>n``.
+
+    Norms are folded once per input row BELOW the join, not inside the
+    pair expression: a cosine written as one expression re-folds both
+    norms per PAIR — 3 array folds instead of 1 on the q×n hot path (the
+    r4 fix). The arithmetic is unchanged (dot / (qn · cn), each factor
+    the same sequential fold), so the float results — and the value-hash
+    oracles — are identical. Callers append the columns they keep.
+    """
+    v = sql_ident(vec)
+    return [
+        f"{sql_ident(id_col)} AS {sql_ident(alias)}",
+        f"{v} AS _{side}vec",
+        f"{norm_sql(v)} AS _{side}n",
+    ]
+
+
+def _top_k(
+    df: DataFrame,
+    k: int,
+    score: str = "cos",
+    *,
+    asc: bool = False,
+    by: str = "query_id",
+    tie: str = "neighbor_id",
+) -> DataFrame:
+    """Add a bigint ``rank`` per ``by`` and keep ``rank <= k``.
+
+    Ranked by ``score`` (descending unless ``asc``) with ties broken by
+    ascending ``tie`` id, so results are totally deterministic.
+    """
+    order = F.col(score).asc() if asc else F.col(score).desc()
+    w = W.partitionBy(by).orderBy(order, F.col(tie).asc())
+    return df.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rank") <= k
+    )
+
+
+def _np_side(df: DataFrame, id_col: str, vec: str, what: str):
+    """The small side of a ``*_np`` twin, collected to the driver.
+
+    Returns ``(ids, matrix, norms)`` sorted by id — a float64 matrix and
+    its norms in the same sequential left fold as :func:`norm_sql` — or
+    None when ``df`` is empty. Arrow/cache batches are sized for the row
+    width (invariant 27). The relation is the same fixed-size one the
+    Column path broadcasts (invariant 5's closure class).
+    """
+    import numpy as np
+
+    from hive_plan_service_spark.operators.artifacts import bounded_collect
+
+    rows = bounded_collect(
+        df.select(F.col(id_col).alias("_id"), F.col(vec).alias("_v")), what
+    )
+    if not rows:
+        return None
+    rows.sort(key=lambda r: r["_id"])
+    mat = np.array([r["_v"] for r in rows], dtype=np.float64)
+    apply_wide_row_conf(df.sparkSession, mat.shape[1] * 8)
+    acc = np.zeros(len(mat), dtype=np.float64)
+    for j in range(mat.shape[1]):
+        acc += mat[:, j] * mat[:, j]
+    return np.array([r["_id"] for r in rows]), mat, np.sqrt(acc)
+
+
+def _np_kernels():
+    """The batch arithmetic the ``*_np`` twins run inside ``mapInPandas``.
+
+    Built inside a function so cloudpickle ships both kernels by value:
+    a module-level function pickles by reference, and a python worker
+    that cannot import this package (any driver cwd but the repo root in
+    local mode) would then fail the stage.
+    """
+
+    def batch_matrix(vecs):
+        """An Arrow batch's ``array<float>`` column (an object Series of
+        float32 ndarrays) as a float64 matrix; the per-element
+        float→double cast is exact, matching the Column paths' cast."""
+        import numpy as np
+
+        return np.stack(vecs.to_numpy()).astype(np.float64)
+
+    def batch_cos(x, mat, norms):
+        """Cosine of every ``x`` row against every ``mat`` row.
+
+        Dot and norm accumulate in float64 in the SAME sequential
+        element-order left fold as :func:`dot_sql`/:func:`norm_sql`
+        (an explicit loop over j — never ``np.sum``), and the score
+        composes in ``_PAIR_COS_SQL``'s op order. The divide is
+        where-guarded: a zero-norm operand scores 0.0, bit-matching
+        :func:`cos_div_sql`'s CASE (invariant 31).
+        """
+        import numpy as np
+
+        xn = np.zeros(len(x), dtype=np.float64)
+        dots = np.zeros((len(x), len(mat)), dtype=np.float64)
+        for j in range(mat.shape[1]):  # one fold order for norm AND dot
+            xj = x[:, j]
+            xn += xj * xj
+            dots += xj[:, None] * mat[None, :, j]
+        den = np.sqrt(xn)[:, None] * norms[None, :]
+        return np.divide(dots, den, out=np.zeros_like(dots), where=den != 0)
+
+    return batch_matrix, batch_cos
+
+
+_batch_matrix, _batch_cos = _np_kernels()
 
 
 def cosine_topk(
@@ -80,34 +191,12 @@ def cosine_topk(
     Output: query_id, neighbor_id, cos, rank — rank tie-broken by
     neighbor id so results are totally deterministic.
     """
-    # Norms precomputed BELOW the join (once per row / once per
-    # broadcast query), not inside the pair expression: a cosine
-    # written as one expression re-folds both norms per PAIR — 3 array
-    # folds instead of 1 on the q×n hot path. The arithmetic is unchanged
-    # (dot / (qn · cn), each factor the same sequential fold), so the
-    # float results — and the value-hash oracle — are identical.
-    v = sql_ident(vec)
-    q = queries.selectExpr(
-        f"{sql_ident(query_id)} AS query_id",
-        f"{v} AS _qvec",
-        f"{norm_sql(v)} AS _qn",
-    )
-    c = corpus.selectExpr(
-        f"{sql_ident(corpus_id)} AS neighbor_id",
-        f"{v} AS _cvec",
-        f"{norm_sql(v)} AS _cn",
-    )
+    q = queries.selectExpr(*_norm_proj(query_id, "query_id", vec, "q"))
+    c = corpus.selectExpr(*_norm_proj(corpus_id, "neighbor_id", vec, "c"))
     pairs = c.crossJoin(F.broadcast(q))
     if exclude_self:
         pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = pairs.selectExpr("query_id", "neighbor_id", _PAIR_COS_SQL)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(pairs.selectExpr("query_id", "neighbor_id", _PAIR_COS_SQL), k)
 
 
 def ivf_assign(
@@ -129,28 +218,17 @@ def ivf_assign(
     (fine for tiny fixtures) degrades to O(n²) — measured 115 s vs 12 s
     at 128k vectors (``git show ad4964a:scripts/ann_probe.py``).
     """
-    # norms once per side below the join (same sequential-fold
-    # arithmetic as cosine_topk, so scores are bit-identical) — as a pair
-    # expression each of the O(n·K) assignment rows would re-fold the
-    # row norm K× and the centroid norm n× (cosine_topk's r4 fix)
-    v = sql_ident(vec)
-    c = centroids.selectExpr(
-        f"{sql_ident(centroid_id)} AS _cid",
-        f"{v} AS _centroid",
-        f"{norm_sql(v)} AS _kn",
-    )
+    # an assignment row per (vector, centroid): the per-side norms of
+    # _norm_proj keep the O(n·K) pair expression to one dot fold
+    c = centroids.selectExpr(*_norm_proj(centroid_id, "_cid", vec, "c"))
     scored = (
-        corpus.selectExpr("*", f"{norm_sql(v)} AS _vn")
+        corpus.selectExpr(*_norm_proj(id_col, id_col, vec, "q"))
         .crossJoin(F.broadcast(c))
-        .selectExpr(
-            *map(sql_ident, corpus.columns),
-            "_cid",
-            f"{cos_div_sql(dot_sql(v, '_centroid'), '_vn', '_kn')} AS _cos",
-        )
+        .selectExpr(sql_ident(id_col), "_cid", _PAIR_COS_SQL)
     )
     best = (
         scored.groupBy(id_col)
-        .agg(F.min(F.struct(-F.col("_cos"), F.col("_cid"))).alias("_best"))
+        .agg(F.min(F.struct(-F.col("cos"), F.col("_cid"))).alias("_best"))
         .select(id_col, F.col("_best._cid").alias(centroid_id))
     )
     return corpus.join(best, id_col)
@@ -175,32 +253,23 @@ def cosine_topk_np(
     top-k's — the candidate relation crossing the final rank window is
     ≤ batches·q·k rows, not q·n).
 
-    BIT-IDENTICAL by construction (the ``pq_encode_np`` argument): dot
-    and norm accumulate in float64 in the SAME sequential element-order
-    left fold as :func:`dot_sql`/:func:`norm_sql`, the score composes in
-    the same op order (IEEE multiply is exactly commutative, so qn·cn ==
-    cn·qn bitwise), and the selection order (cos desc, neighbor asc) is
-    the exact rank order of the Column path — pinned by
+    BIT-IDENTICAL by construction (the ``pq_encode_np`` argument): the
+    score is :func:`_batch_cos`, the numpy form of ``_PAIR_COS_SQL``
+    (IEEE multiply is exactly commutative, so qn·cn == cn·qn bitwise),
+    and the selection order (cos desc, neighbor asc) is the exact rank
+    order of the Column path — pinned by
     tests/test_llm_ops.py::test_cosine_topk_np_matches_column. A
-    zero-norm vector scores 0.0 on both paths (``cos_div_sql`` /
-    where-guarded numpy divide — r8 zero-vector semantics; NaN would
+    zero-norm vector scores 0.0 on both paths (invariant 31; NaN would
     sort FIRST in Spark's DESC and last in numpy, so totality is also
     what keeps the twins identical).
 
     Non-SQL-expressible (a Python stage) ⇒ NOT registered (invariant
     1); the oracle-checked canonical path stays :func:`cosine_topk`.
-    The query batch is collected driver-side — the same fixed-size
-    relation the Column path broadcasts (invariant 5's closure class).
     """
     import numpy as np
 
-    from hive_plan_service_spark.operators.artifacts import bounded_collect
-
-    q_rows = bounded_collect(
-        queries.select(F.col(query_id).alias("_qid"), F.col(vec).alias("_qv")),
-        "cosine_topk_np query batch",
-    )
-    if not q_rows:
+    side = _np_side(queries, query_id, vec, "cosine_topk_np query batch")
+    if side is None:
         # Mirror the Column path (r5 ADVICE): cosine_topk on an empty
         # query batch yields an empty result, not an error — return a
         # typed empty frame with the identical output schema.
@@ -213,17 +282,7 @@ def cosine_topk_np(
                 "cos double, rank bigint"
             ),
         )
-    q_rows.sort(key=lambda r: r["_qid"])
-    qids = np.array([r["_qid"] for r in q_rows])
-    qmat = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
-    nq, dim = qmat.shape
-    # Arrow/cache batches sized for the corpus row width (invariant 27)
-    apply_wide_row_conf(queries.sparkSession, dim * 8)
-    qn_acc = np.zeros(nq, dtype=np.float64)
-    for j in range(dim):  # sequential left fold, as norm_sql
-        qn_acc += qmat[:, j] * qmat[:, j]
-    qn = np.sqrt(qn_acc)
-
+    qids, qmat, qn = side
     src = corpus.select(F.col(corpus_id).alias("_cid"), F.col(vec).alias("_v"))
     cid_type = src.schema["_cid"].dataType.simpleString()
     qid_type = queries.schema[query_id].dataType.simpleString()
@@ -234,23 +293,10 @@ def cosine_topk_np(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+            cos = _batch_cos(_batch_matrix(pdf["_v"]), qmat, qn)
             ids = pdf["_cid"].to_numpy()
-            b = len(pdf)
-            cn_acc = np.zeros(b, dtype=np.float64)
-            dots = np.zeros((b, nq), dtype=np.float64)
-            for j in range(dim):  # one fold order for norm AND dot
-                xj = x[:, j]
-                cn_acc += xj * xj
-                dots += xj[:, None] * qmat[None, :, j]
-            # where-guarded divide: zero-norm operand scores 0.0,
-            # bit-matching cos_div_sql's CASE (r8 zero-vector semantics)
-            den = np.sqrt(cn_acc)[:, None] * qn[None, :]
-            cos = np.divide(
-                dots, den, out=np.zeros_like(dots), where=den != 0
-            )
             out_q, out_n, out_c = [], [], []
-            for qi in range(nq):
+            for qi in range(len(qids)):
                 col = cos[:, qi]
                 cand_ids, cand_cos = ids, col
                 if exclude_self:
@@ -269,13 +315,7 @@ def cosine_topk_np(
         _scan,
         schema=f"query_id {qid_type}, neighbor_id {cid_type}, cos double",
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(cands, k)
 
 
 def ivf_assign_np(
@@ -294,19 +334,12 @@ def ivf_assign_np(
     inside ``mapInPandas`` and joins the (id, centroid) assignment back
     exactly as the Column path does.
 
-    BIT-IDENTICAL by construction (the ``pq_encode_np`` argument):
-    dot and norm accumulate in float64 in the SAME sequential
-    element-order left fold as :func:`dot_sql`/:func:`norm_sql` (explicit
-    loop over j — never ``np.sum``), the score is composed in the same op
-    order (``dots / (vn · kn)``), and ``np.argmin`` over centroids
-    sorted by id returns the first minimum = ``min(struct(-cos,
-    cid))``'s smallest-id tie-break. An all-zero CORPUS row makes every
-    score NaN on both paths and both fall back to the smallest centroid
-    id (Spark: all struct keys equal; numpy: argmin returns the first
-    NaN). An all-zero CENTROID would diverge (Spark sorts its NaN score
-    last, numpy argmin would select it first), so it is rejected
-    loudly. Pinned by tests/test_llm_ops.py::
-    test_ivf_assign_np_matches_column.
+    BIT-IDENTICAL by construction (the ``pq_encode_np`` argument): the
+    score is :func:`_batch_cos`, the numpy form of ``_PAIR_COS_SQL``, and
+    ``np.argmin`` over centroids sorted by id returns the first minimum =
+    ``min(struct(-cos, cid))``'s smallest-id tie-break. A zero-norm row
+    or centroid scores 0.0 on both paths (invariant 31). Pinned by
+    tests/test_llm_ops.py::test_ivf_assign_np_matches_column.
 
     Non-SQL-expressible (a Python stage) ⇒ NOT registered (invariant
     1); the oracle-checked path stays :func:`ivf_assign`. The K·dim
@@ -315,27 +348,10 @@ def ivf_assign_np(
     """
     import numpy as np
 
-    from hive_plan_service_spark.operators.artifacts import bounded_collect
-
-    cent_rows = bounded_collect(
-        centroids.select(
-            F.col(centroid_id).alias("_cid"), F.col(vec).alias("_cv")
-        ),
-        "ivf_assign_np centroid set",
-    )
-    if not cent_rows:
+    side = _np_side(centroids, centroid_id, vec, "ivf_assign_np centroid set")
+    if side is None:
         raise ValueError("ivf_assign_np: empty centroid set")
-    cent_rows.sort(key=lambda r: r["_cid"])
-    cids = np.array([r["_cid"] for r in cent_rows])
-    cmat = np.array([r["_cv"] for r in cent_rows], dtype=np.float64)
-    kk, dim = cmat.shape
-    # Arrow/cache batches sized for the corpus row width (invariant 27)
-    apply_wide_row_conf(corpus.sparkSession, dim * 8)
-    kn_acc = np.zeros(kk, dtype=np.float64)
-    for j in range(dim):  # sequential left fold, as norm_sql
-        kn_acc += cmat[:, j] * cmat[:, j]
-    kn = np.sqrt(kn_acc)
-
+    cids, cmat, kn = side
     src = corpus.select(F.col(id_col).alias("_pid"), F.col(vec).alias("_v"))
     id_type = src.schema["_pid"].dataType.simpleString()
     cid_type = centroids.schema[centroid_id].dataType.simpleString()
@@ -346,25 +362,9 @@ def ivf_assign_np(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-            b = len(pdf)
-            vn_acc = np.zeros(b, dtype=np.float64)
-            dots = np.zeros((b, kk), dtype=np.float64)
-            for j in range(dim):  # one fold order for norm AND dot
-                xj = x[:, j]
-                vn_acc += xj * xj
-                dots += xj[:, None] * cmat[None, :, j]
-            # same op order as the Column score: (vn · kn) then a
-            # where-guarded divide (zero-norm operand scores 0.0,
-            # bit-matching cos_div_sql — r8 zero-vector semantics)
-            den = np.sqrt(vn_acc)[:, None] * kn[None, :]
-            neg = -np.divide(
-                dots, den, out=np.zeros_like(dots), where=den != 0
-            )
-            best = np.argmin(neg, axis=1)
-            yield pd.DataFrame(
-                {"_pid": pdf["_pid"].to_numpy(), "_cid": cids[best]}
-            )
+            cos = _batch_cos(_batch_matrix(pdf["_v"]), cmat, kn)
+            best = cids[np.argmin(-cos, axis=1)]
+            yield pd.DataFrame({"_pid": pdf["_pid"].to_numpy(), "_cid": best})
 
     best = src.mapInPandas(
         _assign, schema=f"_pid {id_type}, _cid {cid_type}"
@@ -398,30 +398,17 @@ def ivf_topk(
         )
         .select("query_id", F.col("neighbor_id").alias("centroid_id"))
     )
-    v = sql_ident(vec)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec).alias("_qvec"),
-        F.expr(norm_sql(v)).alias("_qn"),
-    )
+    q = queries.selectExpr(*_norm_proj(id_col, "query_id", vec, "q"))
     candidates = (
-        corpus_assigned.withColumn("_cn", F.expr(norm_sql(v)))
+        corpus_assigned.selectExpr(
+            *_norm_proj(id_col, "neighbor_id", vec, "c"), "centroid_id"
+        )
         .join(F.broadcast(probe), "centroid_id")
         .join(F.broadcast(q), "query_id")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .selectExpr(
-            "query_id",
-            f"{sql_ident(id_col)} AS neighbor_id",
-            f"{cos_div_sql(dot_sql('_qvec', v), '_qn', '_cn')} AS cos",
-        )
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .selectExpr("query_id", "neighbor_id", _PAIR_COS_SQL)
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(candidates, k)
 
 
 def _hyperplane_band_buckets(
@@ -486,39 +473,26 @@ def lsh_topk(
     MinHash-LSH text path. Recall/cost is tuned by (planes, bands).
     """
     bb = _hyperplane_band_buckets(vec, planes, bands, dim)
-    # norms computed once per input row, carried through the explode
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec).alias("_cvec"),
-        F.expr(norm_sql(sql_ident(vec))).alias("_cn"),
-        F.explode(bb).alias("_bb"),
-    ).select(
-        "neighbor_id", "_cvec", "_cn",
-        F.col("_bb.band").alias("band"), F.col("_bb.bucket").alias("bucket"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec).alias("_qvec"),
-        F.expr(norm_sql(sql_ident(vec))).alias("_qn"),
-        F.explode(bb).alias("_bb"),
-    ).select(
-        "query_id", "_qvec", "_qn",
-        F.col("_bb.band").alias("band"), F.col("_bb.bucket").alias("bucket"),
-    )
+
+    # (the plan folds each norm above the Generate, once per band row)
+    def banded(df: DataFrame, alias: str, side: str) -> DataFrame:
+        return df.select(
+            *map(F.expr, _norm_proj(id_col, alias, vec, side)),
+            F.explode(bb).alias("_bb"),
+        ).select(
+            alias, f"_{side}vec", f"_{side}n",
+            F.col("_bb.band").alias("band"), F.col("_bb.bucket").alias("bucket"),
+        )
+
     candidates = (
-        c.join(F.broadcast(q), ["band", "bucket"])
+        banded(corpus, "neighbor_id", "c")
+        .join(F.broadcast(banded(queries, "query_id", "q")), ["band", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "_qvec", "_qn", "_cvec", "_cn")
         .dropDuplicates(["query_id", "neighbor_id"])
         .selectExpr("query_id", "neighbor_id", _PAIR_COS_SQL)
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(candidates, k)
 
 
 # --------------------------------------------------------------------------
@@ -540,6 +514,17 @@ def _subvectors(vec: Column, subspaces: int, dim: int) -> Column:
             )
             for s in range(subspaces)
         ]
+    )
+
+
+def _subvector_rows(
+    df: DataFrame, ident: Column, vec: str, subspaces: int, dim: int,
+    sub: str = "subvec",
+) -> DataFrame:
+    """``(ident, s, <sub>)``: one row per subspace slice of ``vec``."""
+    return df.select(
+        ident,
+        F.posexplode(_subvectors(F.col(vec), subspaces, dim)).alias("s", sub),
     )
 
 
@@ -574,12 +559,7 @@ def pq_train_codebooks(
     """
     from hive_plan_service_spark.operators.kmeans import kmeans_integer
 
-    subs = corpus.select(
-        F.col(id_col),
-        F.posexplode(_subvectors(F.col(vec), subspaces, dim)).alias(
-            "s", "subvec"
-        ),
-    )
+    subs = _subvector_rows(corpus, F.col(id_col), vec, subspaces, dim)
     return kmeans_integer(
         subs,
         k=codes,
@@ -616,12 +596,7 @@ def pq_train_codebooks_np(
     # subvector explode reads (kmeans will recompute from the narrower
     # subvec width, but the ratchet only ever moves down) — invariant 27
     apply_wide_row_conf(corpus.sparkSession, dim * 8)
-    subs = corpus.select(
-        F.col(id_col),
-        F.posexplode(_subvectors(F.col(vec), subspaces, dim)).alias(
-            "s", "subvec"
-        ),
-    )
+    subs = _subvector_rows(corpus, F.col(id_col), vec, subspaces, dim)
     return kmeans_integer_np(
         subs,
         k=codes,
@@ -647,12 +622,7 @@ def pq_encode(
     One map pass over the corpus (explode to S rows, broadcast the
     S·codes codebook, min-struct argmin) — the IVF assignment shape, S×.
     """
-    sub = corpus.select(
-        F.col(id_col),
-        F.posexplode(_subvectors(F.col(vec), subspaces, dim)).alias(
-            "s", "subvec"
-        ),
-    )
+    sub = _subvector_rows(corpus, F.col(id_col), vec, subspaces, dim)
     scored = sub.join(F.broadcast(codebooks), "s").select(
         id_col,
         "s",
@@ -712,8 +682,11 @@ def pq_encode_np(
     )
     n_codes = len(book_rows) // subspaces if subspaces else 0
     got = sorted((r["s"], r["code"]) for r in book_rows)
-    want = [(i // n_codes, i % n_codes) for i in range(len(book_rows))]
-    if not book_rows or len(book_rows) % subspaces or got != want:
+    # n_codes is 0 for an empty or undersized book: it fails before
+    # the layout comparison divides by it
+    if not n_codes or len(book_rows) % subspaces or got != [
+        divmod(i, n_codes) for i in range(len(book_rows))
+    ]:
         raise ValueError(
             "pq_encode_np: codebook codes must be contiguous 0-based "
             f"with one equal count per subspace; got {len(book_rows)} "
@@ -736,10 +709,7 @@ def pq_encode_np(
         for pdf in batches:
             if not len(pdf):
                 continue
-            # array<float> arrives as object Series of float32 ndarrays;
-            # per-element float→double cast is exact, matching the
-            # Column path's cast("double")
-            x = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+            x = _batch_matrix(pdf["_v"])
             b = len(pdf)
             out_codes = np.empty((b, subspaces), dtype=np.int32)
             for s in range(subspaces):
@@ -811,11 +781,8 @@ def pq_topk(
     (s, code) entries (ragged, gapped, or duplicated layouts all raise
     at run time; one check per query row on the broadcast side).
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(_subvectors(F.col(vec), subspaces, dim)).alias(
-            "s", "qsub"
-        ),
+    q = _subvector_rows(
+        queries, F.col(id_col).alias("query_id"), vec, subspaces, dim, "qsub"
     )
     # per-subspace partial distances are quantized to int64 micro-units
     # (FLOOR(d·2^40): power-of-two multiply is exact, the 2^-40 rounding
@@ -905,12 +872,7 @@ def pq_topk(
             adist_expr.alias("adist"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return adist.withColumn(
-        "rank", F.row_number().over(w).cast("bigint")
-    ).filter(F.col("rank") <= k)
+    return _top_k(adist, k, "adist", asc=True)
 
 
 def pq_topk_refined(
@@ -960,17 +922,8 @@ def pq_topk_refined(
         subspaces=subspaces,
         dim=dim,
     ).select("query_id", "neighbor_id")
-    v = sql_ident(vec)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec).alias("_qvec"),
-        F.expr(norm_sql(v)).alias("_qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec).alias("_cvec"),
-        F.expr(norm_sql(v)).alias("_cn"),
-    )
+    q = queries.selectExpr(*_norm_proj(id_col, "query_id", vec, "q"))
+    c = corpus.selectExpr(*_norm_proj(id_col, "neighbor_id", vec, "c"))
     # shortlist is |queries|·shortlist rows — fixed-size; corpus side
     # joins by id (no broadcast hint on the SF-proportional corpus)
     rer = (
@@ -978,9 +931,4 @@ def pq_topk_refined(
         .join(c, "neighbor_id")
         .selectExpr("query_id", "neighbor_id", _PAIR_COS_SQL)
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return rer.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(rer, k)

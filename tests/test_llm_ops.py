@@ -408,6 +408,10 @@ def test_pq_encode_np_rejects_bad_codebooks(spark, sf_dir):
     gapped = books.filter(~((F.col("s") == 1) & (F.col("code") == 2)))
     with pytest.raises(ValueError, match="contiguous 0-based"):
         vx.pq_encode_np(emb, gapped, subspaces=4)
+    # fewer entries than subspaces: zero codes per subspace
+    undersized = books.filter((F.col("s") == 0) & (F.col("code") == 0))
+    with pytest.raises(ValueError, match="contiguous 0-based"):
+        vx.pq_encode_np(emb, undersized, subspaces=4)
 
 
 def test_cosine_topk_np_matches_column(spark, sf_dir):
@@ -613,6 +617,63 @@ def test_pq_topk_ragged_codebook_raises(spark):
     )
     with pytest.raises(Exception, match="pq_topk"):
         vx.pq_topk(queries, codes, gapped, k=1, subspaces=2, dim=4).collect()
+
+
+def test_topk_operators_break_score_ties_by_neighbor_id(spark):
+    """Every top-k operator shares one rank rule: equal scores rank by
+    ascending neighbor id, and ``rank`` is a bigint running 1..k. The
+    corpus is built so duplicate vectors score exactly equal: ids 3, 5, 7
+    point along the query (cos 1, ADC distance 0), ids 4 and 8 sit at 45°
+    (cos 0.707, ADC distance 1) and id 6 is orthogonal."""
+    from pyspark.sql.types import LongType
+
+    rows = [
+        (7, [2.0, 0.0, 0.0, 0.0]),
+        (4, [1.0, 1.0, 0.0, 0.0]),
+        (3, [2.0, 0.0, 0.0, 0.0]),
+        (8, [1.0, 1.0, 0.0, 0.0]),
+        (6, [0.0, 1.0, 0.0, 0.0]),
+        (5, [2.0, 0.0, 0.0, 0.0]),
+        (0, [1.0, 0.0, 0.0, 0.0]),
+    ]
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).repartition(3)
+    queries = corpus.filter(F.col("vec_id") == 0)
+    centroids = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
+        "centroid_id int, embedding array<float>",
+    )
+    book = spark.createDataFrame(
+        [
+            (0, 0, [1.0, 0.0]), (0, 1, [1.0, 1.0]), (0, 2, [0.0, 1.0]),
+            (1, 0, [0.0, 0.0]), (1, 1, [1.0, 0.0]), (1, 2, [0.0, 1.0]),
+        ],
+        "s int, code int, centroid array<double>",
+    )
+    codes = vx.pq_encode(corpus, book, subspaces=2, dim=4)
+    assigned = vx.ivf_assign(corpus, centroids)
+    ops = {
+        "cosine_topk": lambda k: vx.cosine_topk(queries, corpus, k),
+        "cosine_topk_np": lambda k: vx.cosine_topk_np(queries, corpus, k),
+        "ivf_topk": lambda k: vx.ivf_topk(queries, assigned, centroids, k),
+        "lsh_topk": lambda k: vx.lsh_topk(queries, corpus, k, dim=4),
+        "pq_topk": lambda k: vx.pq_topk(
+            queries, codes, book, k, subspaces=2, dim=4
+        ),
+    }
+    # lsh candidates are only guaranteed for the vectors along the query
+    want = {2: [3, 5], 4: [3, 5, 7, 4]}
+    for name, run in ops.items():
+        for k, ids in want.items():
+            if name == "lsh_topk" and k == 4:
+                continue
+            out = run(k)
+            assert out.schema["rank"].dataType == LongType(), name
+            got = sorted(
+                (r["rank"], r["neighbor_id"]) for r in out.collect()
+            )
+            assert got == list(enumerate(ids, 1)), (name, k, got)
 
 
 def test_pagerank_matches_integer_model(spark, sf_dir):
